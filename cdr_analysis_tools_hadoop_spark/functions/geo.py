@@ -135,26 +135,30 @@ def xy_to_cell(res: int, ix: int, iy: int) -> int:
     return (res << 54) + ix * (1 << res) + iy
 
 
-def cell_ring(cell: int, k: int) -> list[int]:
-    """All cells at Chebyshev distance exactly k (k=0 -> [cell]).
+def cell_block(cells: np.ndarray, res: int) -> np.ndarray:
+    """(m, 9) ids of each cell's 3x3 block: the cell itself (ring 0)
+    and its 8 neighbours at Chebyshev distance 1 (ring 1); -1 where
+    the block runs off the grid.
 
     The cell-ring expansion primitive for kNN search (reference
     analogue: TurkcellReallocationUDF's 300 m nearest-POI lookup,
     SURVEY.md §2.3 J8).
     """
-    res, ix, iy = cell_to_xy(cell)
     n = 1 << res
-    if k == 0:
-        return [cell]
-    out = []
-    for dx in range(-k, k + 1):
-        for dy in range(-k, k + 1):
-            if max(abs(dx), abs(dy)) != k:
-                continue
-            x, y = ix + dx, iy + dy
-            if 0 <= x < n and 0 <= y < n:
-                out.append(xy_to_cell(res, x, y))
-    return out
+    rem = np.asarray(cells, dtype=np.int64) - (np.int64(res) << 54)
+    d = np.arange(-1, 2)
+    ix = (rem // n)[:, None, None] + d[:, None]
+    iy = (rem % n)[:, None, None] + d[None, :]
+    on_grid = (ix >= 0) & (ix < n) & (iy >= 0) & (iy < n)
+    return np.where(on_grid, xy_to_cell(res, ix, iy), -1).reshape(len(rem), 9)
+
+
+def find_sorted(keys: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """Position of each ``q`` in sorted ``keys``, -1 where absent."""
+    pos = np.searchsorted(keys, q)
+    ok = pos < len(keys)
+    ok[ok] = keys[pos[ok]] == q[ok]
+    return np.where(ok, pos, -1)
 
 
 def cell_size_m(res: int) -> float:
@@ -289,30 +293,6 @@ def polygon_bbox(ring: np.ndarray) -> tuple[float, float, float, float]:
         float(ring[:, 0].max()),
         float(ring[:, 1].max()),
     )
-
-
-def polygon_cover(ring: np.ndarray, res: int) -> list[int]:
-    """Conservative cell cover of a polygon at resolution ``res``:
-    every cell intersecting the polygon's BOUNDING BOX (a superset of
-    the polygon's own cells — no membership test here by design; the
-    cover is a candidate set for an equi-join, and exact membership
-    is refined by ray casting on the point itself, as
-    spatial_join.pip_join does). A polyfill-tight cover would shrink
-    the candidate set for thin diagonal polygons at the cost of a
-    corner/center ray cast per cell — add it only if a profile shows
-    the bbox slack dominating a join.
-    """
-    n = 1 << res
-    min_lon, min_lat, max_lon, max_lat = polygon_bbox(ring)
-    ix0 = max(0, int(math.floor((min_lon - LON0) / DLON * n)))
-    ix1 = min(n - 1, int(math.floor((max_lon - LON0) / DLON * n)))
-    iy0 = max(0, int(math.floor((min_lat - LAT0) / DLAT * n)))
-    iy1 = min(n - 1, int(math.floor((max_lat - LAT0) / DLAT * n)))
-    cells = []
-    for ix in range(ix0, ix1 + 1):
-        for iy in range(iy0, iy1 + 1):
-            cells.append(xy_to_cell(res, ix, iy))
-    return cells
 
 
 # ---------------------------------------------------------------------------

@@ -1,12 +1,13 @@
-"""Cell-ring expansion kNN against a broadcast site layer.
+"""Cell-ring expansion kNN against a replicated site layer.
 
 Reference parity: J8 — `TurkcellReallocationUDF` relocates STAY points
 to the nearest POI within REALLOCATE_RADIUS=300 m (constant verified
 in the jar bytecode, reference lib/pflow-hiveUDF.jar; invoked by
 queries/interpolation/insert_poi_relocation.sql:1-3). The reference
 re-reads a sideloaded TSV inside every UDF call; here the site layer
-is compiled ONCE into a cell->sites index, broadcast, and probed with
-ring expansion:
+is compiled ONCE into a cell->sites index of numpy arrays, shipped to
+the tasks inside the kernel closure (no broadcast variable to manage),
+and probed with ring expansion:
 
   ring 0: the point's own cell; ring k: cells at Chebyshev distance k.
   After scanning ring k, any candidate at distance <= k * cell_edge is
@@ -15,7 +16,8 @@ ring expansion:
   of O(all sites).
 
 Everything is Arrow-batched numpy (mapInPandas); the index scales to
-millions of sites because only cell-local candidates are touched.
+millions of sites because only cell-local candidates are touched (once
+the closure pickles past 1 MB, PySpark broadcasts the command itself).
 """
 
 from __future__ import annotations
@@ -31,7 +33,7 @@ from ..functions import geo
 
 
 class SiteIndex:
-    """cell -> site indices at a resolution sized to the query radius."""
+    """Sites bucketed by cell, at a resolution sized to the query radius."""
 
     def __init__(self, sites: np.ndarray, res: int):
         """``sites``: (n, 3) of (site_id, lat, lon)."""
@@ -48,19 +50,11 @@ class SiteIndex:
         self.lat = sites[:, 1].astype(np.float64)
         self.lon = sites[:, 2].astype(np.float64)
         cells = geo.cell_id_np(self.lat, self.lon, res)
-        order = np.argsort(cells, kind="stable")
-        self.sorted_cells = cells[order]
-        self.order = order
-        # CSR layout: unique cells + slice bounds into `order`
-        self.uc, self.starts = np.unique(self.sorted_cells, return_index=True)
+        self.order = np.argsort(cells, kind="stable")
+        # CSR layout: sorted unique cells ``uc``; the sites of cell
+        # ``uc[j]`` are ``order[starts[j]:ends[j]]``
+        self.uc, self.starts = np.unique(cells[self.order], return_index=True)
         self.ends = np.append(self.starts[1:], len(cells))
-        self.cell_map = {int(c): i for i, c in enumerate(self.uc)}
-
-    def sites_in_cell(self, cell: int) -> np.ndarray:
-        i = self.cell_map.get(cell)
-        if i is None:
-            return np.empty(0, dtype=np.int64)
-        return self.order[self.starts[i]:self.ends[i]]
 
 
 def pick_res_for_radius(radius_m: float) -> int:
@@ -91,16 +85,13 @@ def nearest_site_within(
 ) -> DataFrame:
     """k=1 within-radius lookup (the TurkcellReallocation semantics):
     nearest site id + distance, or nulls when none within radius."""
-    spark = df.sparkSession
     res = pick_res_for_radius(radius_m)
-    index = SiteIndex(np.asarray(sites, dtype=np.float64), res)
-    bc = spark.sparkContext.broadcast(index)
+    idx = SiteIndex(np.asarray(sites, dtype=np.float64), res)
     dist_fn = geo.haversine_np if metric == "haversine" else (
         lambda a, b, c, d: np.sqrt(geo.planar_d2_np(a, b, c, d)) * geo.M_PER_DEG
     )
 
     def kernel(batches):
-        idx: SiteIndex = bc.value
         for pdf in batches:
             lat = pdf[lat_col].to_numpy(dtype=np.float64)
             lon = pdf[lon_col].to_numpy(dtype=np.float64)
@@ -111,17 +102,14 @@ def nearest_site_within(
             order = np.argsort(inv, kind="stable")
             starts = np.searchsorted(inv[order], np.arange(len(uniq)))
             ends = np.append(starts[1:], len(inv))
-            # ring 0 + ring 1 always suffice: cell edge >= radius
-            for ci, c in enumerate(uniq):
-                cand: list[np.ndarray] = []
-                for k in (0, 1):
-                    for cc in geo.cell_ring(int(c), k):
-                        s = idx.sites_in_cell(cc)
-                        if len(s):
-                            cand.append(s)
-                if not cand:
-                    continue
-                cand_idx = np.concatenate(cand)
+            # ring 0 + ring 1 always suffice: cell edge >= radius; only
+            # cells with a site in that 3x3 block enter the loop
+            slot = geo.find_sorted(idx.uc, geo.cell_block(uniq, idx.res))
+            near = slot >= 0
+            for ci in np.flatnonzero(near.any(axis=1)):
+                cand_idx = np.concatenate(
+                    [idx.order[idx.starts[j]:idx.ends[j]] for j in slot[ci, near[ci]]]
+                )
                 rows = order[starts[ci]:ends[ci]]
                 d = dist_fn(
                     lat[rows, None], lon[rows, None],

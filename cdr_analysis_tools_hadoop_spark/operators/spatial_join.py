@@ -1,4 +1,4 @@
-"""Broadcast point-in-polygon join: cell cover + ray-casting refine.
+"""Map-side point-in-polygon join: cell cover + ray-casting refine.
 
 The core operator the reference promised but never shipped
 (`FindPolygon`/`FindPolygon2` registered from the missing
@@ -8,14 +8,21 @@ north_star:
 
 1. The polygon layer (a DIMENSION: zones, admin boundaries) is
    compiled driver-side into a cell index at a chosen resolution:
-   - interior cells  -> polygon id decided, no per-point work
+   - interior cells  -> polygon id decided, no per-point work; stored
+     as runs of consecutive cell ids (grid column segments)
    - boundary cells  -> candidate polygon list, per-point ray cast
    The cover is exact: a cell is interior iff all 4 corners are
    inside AND no polygon edge intersects the cell rectangle.
-2. The index is broadcast (Spark broadcast variable, NOT a shuffle).
+2. The index is plain numpy arrays (about 100 KB for 25 Voronoi
+   zones at res 8), captured in the UDF closure: Spark ships it in
+   the task binary and frees it with the job, so there is no
+   broadcast variable to create or destroy, and no shuffle. A layer
+   whose index pickles past the 1 MB
+   spark.broadcast.UDFCompressionThreshold is still correct: PySpark
+   then broadcasts the pickled command itself.
 3. Fact rows compute their cell id JVM-side (codegen expression) and
-   are refined in an Arrow-batched mapInPandas kernel: one numpy
-   ray-cast call per (boundary polygon x batch), never per row.
+   are refined in an Arrow-batched pandas UDF: one numpy ray-cast
+   call per (candidate polygon x batch), never per row.
 
 At 10^12 rows this is a map-only stage — zero shuffle — with work
 proportional to boundary-cell density only. Hotspot polygons (a huge
@@ -84,20 +91,32 @@ def _edges_cross_cells(
 
 
 class PolygonIndex:
-    """Driver-side compiled cell index of a polygon layer.
+    """Driver-side compiled cell index of a polygon layer, held in
+    numpy arrays only so that it pickles small enough to travel inside
+    a UDF closure.
 
-    interior: dict cell -> poly_idx (first polygon wins: layers are
-    expected non-overlapping; overlaps resolve by layer order).
-    boundary: dict cell -> np.ndarray of candidate poly_idx.
+    Cell ids are ``(res << 54) + ix * 2^res + iy``, so consecutive ids
+    walk a grid column:
+
+    - interior: sorted, disjoint ``[run_lo, run_hi)`` cell-id runs,
+      every cell of run ``i`` wholly inside polygon ``run_poly[i]``;
+    - boundary: sorted ``bnd_cells`` whose candidate polygons are
+      ``bnd_poly[bnd_ptr[i]:bnd_ptr[i + 1]]`` in ascending layer order.
+
+    Overlaps resolve by layer order (the first polygon containing a
+    point wins). A cell inside polygon ``p`` stays interior only when
+    no earlier polygon's boundary touches it; otherwise it becomes a
+    boundary cell whose last candidate is ``p``.
     """
 
     def __init__(self, polys: list[tuple[object, np.ndarray]], res: int):
         self.res = res
         self.ids = [pid for pid, _ in polys]
         self.rings = [np.asarray(r, dtype=np.float64) for _, r in polys]
-        self.interior: dict[int, int] = {}
-        boundary: dict[int, list[int]] = {}
         n = 1 << res
+        # (cell, polygon) pairs, interior and boundary, over all polygons
+        ic, bc = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+        ip, bp = [np.empty(0, np.int32)], [np.empty(0, np.int32)]
         for idx, ring in enumerate(self.rings):
             if len(ring) < 3:
                 continue
@@ -121,98 +140,90 @@ class PolygonIndex:
             crosses = _edges_cross_cells(ring, xs, ys, nx, ny)
             interior_mask = all_in & ~crosses
             boundary_mask = (any_in | crosses) & ~interior_mask
-            for iy_rel, ix_rel in zip(*np.nonzero(interior_mask)):
-                cell = geo.xy_to_cell(res, ix0 + int(ix_rel), iy0 + int(iy_rel))
-                self.interior.setdefault(cell, idx)
-            for iy_rel, ix_rel in zip(*np.nonzero(boundary_mask)):
-                cell = geo.xy_to_cell(res, ix0 + int(ix_rel), iy0 + int(iy_rel))
-                boundary.setdefault(cell, []).append(idx)
-        self.boundary = {c: np.array(v, dtype=np.int64) for c, v in boundary.items()}
-        # Vectorized lookup tables (sorted keys + searchsorted) — the
-        # kernel must not do per-unique-cell Python dict lookups.
-        self.int_keys = np.fromiter(self.interior.keys(), dtype=np.int64)
-        order = np.argsort(self.int_keys)
-        self.int_keys = self.int_keys[order]
-        self.int_vals = np.fromiter(self.interior.values(), dtype=np.int64)[order]
-        # <=64 polygons: candidate sets as one uint64 bitmask per cell,
-        # enabling a per-POLYGON (not per-cell) refinement loop in the
-        # kernel — 25 vectorized ray-casts per batch instead of one
-        # Python iteration per boundary cell present.
-        self.bnd_keys: np.ndarray | None = None
-        self.bnd_masks: np.ndarray | None = None
-        if len(self.rings) <= 64 and self.boundary:
-            self.bnd_keys = np.fromiter(self.boundary.keys(), dtype=np.int64)
-            order = np.argsort(self.bnd_keys)
-            self.bnd_keys = self.bnd_keys[order]
-            self.bnd_masks = np.array(
-                [
-                    int(np.bitwise_or.reduce(1 << v.astype(np.uint64)))
-                    for v in self.boundary.values()
-                ],
-                dtype=np.uint64,
-            )[order]
+            ids = geo.xy_to_cell(
+                res, np.arange(ix0, ix1 + 1)[None, :], np.arange(iy0, iy1 + 1)[:, None]
+            )
+            for cells, owners, mask in ((ic, ip, interior_mask), (bc, bp, boundary_mask)):
+                cells.append(ids[mask])
+                owners.append(np.full(int(mask.sum()), idx, dtype=np.int32))
+        ic, ip, bc, bp = map(np.concatenate, (ic, ip, bc, bp))
+        # interior owner of a cell: the first polygon it lies inside
+        order = np.lexsort((ip, ic))
+        ic, ip = ic[order], ip[order]
+        first = np.ones(len(ic), dtype=bool)
+        first[1:] = ic[1:] != ic[:-1]
+        ic, ip = ic[first], ip[first]
+        # boundary candidates after a cell's owner can never win
+        at = geo.find_sorted(ic, bc)
+        owned = at >= 0
+        keep = ~owned
+        keep[owned] = bp[owned] < ip[at[owned]]
+        # an owned cell touched by an earlier boundary is refined, with
+        # its owner as the last candidate
+        demoted = np.unique(at[owned & keep])
+        bc = np.concatenate([bc[keep], ic[demoted]])
+        bp = np.concatenate([bp[keep], ip[demoted]])
+        live = np.ones(len(ic), dtype=bool)
+        live[demoted] = False
+        ic, ip = ic[live], ip[live]
+        brk = np.ones(len(ic), dtype=bool)
+        brk[1:] = (ic[1:] != ic[:-1] + 1) | (ip[1:] != ip[:-1])
+        last = np.ones(len(ic), dtype=bool)
+        last[:-1] = brk[1:]
+        self.run_lo = ic[brk]
+        self.run_hi = ic[last] + 1
+        self.run_poly = ip[brk]
+        order = np.lexsort((bp, bc))
+        self.bnd_poly = bp[order]
+        self.bnd_cells, first_pair = np.unique(bc[order], return_index=True)
+        self.bnd_ptr = np.append(first_pair, len(bc)).astype(np.int32)
 
     def lookup_interior(self, cells: np.ndarray) -> np.ndarray:
         """Vectorized cell -> interior polygon idx (-1 if not interior)."""
-        if len(self.int_keys) == 0:
+        if len(self.run_lo) == 0:
             return np.full(len(cells), -1, dtype=np.int64)
-        pos = np.clip(
-            np.searchsorted(self.int_keys, cells), 0, len(self.int_keys) - 1
-        )
-        return np.where(
-            self.int_keys[pos] == cells, self.int_vals[pos], -1
-        ).astype(np.int64)
-
-    def lookup_boundary_mask(self, cells: np.ndarray) -> np.ndarray:
-        """Vectorized cell -> candidate bitmask (0 if not boundary)."""
-        pos = np.searchsorted(self.bnd_keys, cells)
-        pos = np.clip(pos, 0, len(self.bnd_keys) - 1)
-        return np.where(
-            self.bnd_keys[pos] == cells, self.bnd_masks[pos], np.uint64(0)
-        )
+        pos = np.searchsorted(self.run_lo, cells, side="right") - 1
+        hit = (pos >= 0) & (cells < self.run_hi[pos])
+        return np.where(hit, self.run_poly[pos], -1).astype(np.int64)
 
     def stats(self) -> dict:
         return {
             "res": self.res,
             "polygons": len(self.rings),
-            "interior_cells": len(self.interior),
-            "boundary_cells": len(self.boundary),
+            "interior_cells": int((self.run_hi - self.run_lo).sum()),
+            "boundary_cells": len(self.bnd_cells),
         }
 
 
 def assign_zone_np(idx: PolygonIndex, cells: np.ndarray, lat: np.ndarray, lon: np.ndarray) -> np.ndarray:
     """Vectorized polygon assignment (-1 = none) shared by the
     pip_join UDF and the fused benchmark kernel: interior cells via
-    one searchsorted, boundary rows via one ray cast per polygon."""
+    one searchsorted over the runs, boundary rows via one ray cast per
+    candidate polygon present in the batch, in layer order (first hit
+    wins)."""
     uniq, inv = np.unique(cells, return_inverse=True)
     out = idx.lookup_interior(uniq)[inv]
-    if idx.bnd_keys is not None:
-        cand = idx.lookup_boundary_mask(uniq)[inv]
-        for pidx in range(len(idx.rings)):
-            sel = np.flatnonzero(
-                (out == -1) & ((cand >> np.uint64(pidx)) & np.uint64(1) == 1)
-            )
-            if len(sel) == 0:
-                continue
-            hit = geo.point_in_polygon_np(lat[sel], lon[sel], idx.rings[pidx])
-            out[sel[hit]] = pidx
-    else:
-        bound_ci = [ci for ci, c in enumerate(uniq) if int(c) in idx.boundary]
-        if bound_ci:
-            order = np.argsort(inv, kind="stable")
-            starts = np.searchsorted(inv[order], np.arange(len(uniq)))
-            ends = np.append(starts[1:], len(inv))
-            for ci in bound_ci:
-                rows = order[starts[ci]:ends[ci]]
-                undecided = rows[out[rows] == -1]
-                for pidx in idx.boundary[int(uniq[ci])]:
-                    if len(undecided) == 0:
-                        break
-                    hit = geo.point_in_polygon_np(
-                        lat[undecided], lon[undecided], idx.rings[pidx]
-                    )
-                    out[undecided[hit]] = pidx
-                    undecided = undecided[~hit]
+    slot = geo.find_sorted(idx.bnd_cells, uniq)
+    bu = np.flatnonzero(slot >= 0)
+    if len(bu) == 0:
+        return out
+    # (unique cell, candidate polygon) pairs of the batch's boundary cells
+    lo = idx.bnd_ptr[slot[bu]]
+    cnt = idx.bnd_ptr[slot[bu] + 1] - lo
+    pair_u = np.repeat(bu, cnt)
+    pair_p = idx.bnd_poly[
+        np.repeat(lo - np.cumsum(cnt) + cnt, cnt) + np.arange(cnt.sum())
+    ]
+    is_bnd = np.zeros(len(uniq), dtype=bool)
+    is_bnd[bu] = True
+    rows = np.flatnonzero(is_bnd[inv])
+    rinv = inv[rows]
+    for pidx in np.unique(pair_p):
+        cand = np.zeros(len(uniq), dtype=bool)
+        cand[pair_u[pair_p == pidx]] = True
+        sel = rows[cand[rinv] & (out[rows] == -1)]
+        hit = geo.point_in_polygon_np(lat[sel], lon[sel], idx.rings[pidx])
+        out[sel[hit]] = pidx
     return out
 
 
@@ -229,9 +240,7 @@ def pip_join(
     Map-only: cell id is computed JVM-side; the Arrow kernel touches
     only boundary-cell rows with real geometry work.
     """
-    spark = df.sparkSession
     index = PolygonIndex(polys, res)
-    bc = spark.sparkContext.broadcast(index)
     id_strs = [str(p) for p in index.ids]
 
     work = df.withColumn("__cell", F.expr(geo.cell_id_sql(lat_col, lon_col, res)))
@@ -247,9 +256,9 @@ def pip_join(
 
     @F.pandas_udf(LongType())
     def refine(cells_s: pd.Series, lat_s: pd.Series, lon_s: pd.Series) -> pd.Series:
-        idx: PolygonIndex = bc.value
+        # the index rides in this closure, i.e. in the task binary
         out = assign_zone_np(
-            idx,
+            index,
             cells_s.to_numpy(dtype=np.int64),
             lat_s.to_numpy(dtype=np.float64),
             lon_s.to_numpy(dtype=np.float64),

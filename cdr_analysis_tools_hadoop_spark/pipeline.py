@@ -2,8 +2,9 @@
 
   images -> decode-validate (Arrow kernel) -> phash->anchor (JVM expr)
          -> H3-style cell encode (JVM expr)
-         -> broadcast PIP join vs tower-Voronoi polygons
-            (cell cover + ray-cast refine, operators/spatial_join.py)
+         -> map-side PIP join vs tower-Voronoi polygons
+            (cell cover + ray-cast refine, operators/spatial_join.py;
+            the index rides in the kernel closure)
          -> tile-pyramid assignment (JVM expr)
          -> zone/tile aggregates
 
@@ -149,17 +150,21 @@ def with_anchor(decoded: DataFrame) -> DataFrame:
     )
 
 
-def broadcast_polygon_index(spark: SparkSession, pip_res: int = 8):
-    """Build the tower-Voronoi PolygonIndex once and broadcast it;
-    returns (broadcast, zone id strings). Shared by run_pipeline and
-    its chunked resumable loop so the loop holds ONE broadcast."""
+def tower_polygons() -> list[tuple[int, np.ndarray]]:
+    """The 25-tower Voronoi zone layer the image pipeline joins against."""
     towers = synthetic.towers_np(25)
-    polys = list(
+    return list(
         zip(towers[:, 0].astype(np.int64), synthetic.voronoi_polygons(towers))
     )
-    index = spatial_join.PolygonIndex(polys, pip_res)
-    bc = spark.sparkContext.broadcast(index)
-    return bc, [str(p) for p in index.ids]
+
+
+def broadcast_polygon_index(spark: SparkSession, pip_res: int = 8):
+    """Build the tower-Voronoi PolygonIndex and broadcast it; returns
+    (broadcast, zone id strings). A cost probe only: the engine ships
+    the index inside its kernel closures and never calls this. The
+    caller owns the broadcast and must unpersist or destroy it."""
+    index = spatial_join.PolygonIndex(tower_polygons(), pip_res)
+    return spark.sparkContext.broadcast(index), [str(p) for p in index.ids]
 
 
 def run_pipeline(
@@ -167,7 +172,6 @@ def run_pipeline(
     images: DataFrame,
     base_zoom: int = 14,
     pip_res: int = 8,
-    index_bc=None,
 ) -> DataFrame:
     """Full pipeline; returns the per-(zone, tile) aggregate frame.
 
@@ -188,16 +192,11 @@ def run_pipeline(
     building blocks for ad-hoc queries; this fusion is the benchmark/
     production path for the full-table rollup. Both paths share the
     same kernels (codec.decode, PolygonIndex, assign_zone_np, *_np
-    geo math), and tests assert fused == staged.
-
-    ``index_bc``: a prebuilt ``broadcast_polygon_index(...)`` result.
-    Loop callers (run_pipeline_resumable: one run_pipeline per chunk)
-    MUST pass it — rebuilding the tessellation and broadcasting a
-    fresh never-destroyed PolygonIndex per chunk accumulates one
-    broadcast copy per chunk in driver and executor memory for the
-    session lifetime.
+    geo math), and tests assert fused == staged. The PolygonIndex
+    rides in the kernel closure, so Spark ships it in the task binary
+    and frees it with the job.
     """
-    bc, id_strs = index_bc or broadcast_polygon_index(spark, pip_res)
+    index = spatial_join.PolygonIndex(tower_polygons(), pip_res)
 
     out_schema = StructType(
         [
@@ -215,7 +214,6 @@ def run_pipeline(
     def kernel(batches):
         import pyarrow as pa
 
-        idx = bc.value
         for rb in batches:
             # only the PSNR gate feeds the rollup — mean_luma is
             # column-pruned (want_luma=False) exactly as Catalyst
@@ -226,8 +224,8 @@ def run_pipeline(
             phash = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
             lat = geo.anchor_lat_np(phash)
             lon = geo.anchor_lon_np(phash)
-            cells = geo.cell_id_np(lat, lon, idx.res)
-            pidx = spatial_join.assign_zone_np(idx, cells, lat, lon)
+            cells = geo.cell_id_np(lat, lon, index.res)
+            pidx = spatial_join.assign_zone_np(index, cells, lat, lon)
             x, y = geo.tile_xyz_np(lat, lon, base_zoom)
             yield pa.RecordBatch.from_arrays(
                 [
@@ -240,7 +238,7 @@ def run_pipeline(
                 names=["pidx", "x", "y", "psnr_ok", "caption_len"],
             )
 
-    ids_arr = F.array(*[F.lit(s) for s in id_strs])
+    ids_arr = F.array(*[F.lit(str(p)) for p in index.ids])
     compact = narrow.mapInArrow(kernel, schema=out_schema)
     return (
         compact.withColumn(
@@ -380,8 +378,6 @@ def run_pipeline_resumable(
     conf_key = "spark.sql.sources.partitionOverwriteMode"
     prior = spark.conf.get(conf_key, "static")
     spark.conf.set(conf_key, "dynamic")
-    # ONE polygon-index broadcast for all chunks (see run_pipeline)
-    shared_index = broadcast_polygon_index(spark, pip_res)
     try:
         for i in todo:
             if max_chunks is not None and summary["written"] >= max_chunks:
@@ -394,7 +390,6 @@ def run_pipeline_resumable(
                     spark.read.parquet(*assign[i]),
                     base_zoom,
                     pip_res,
-                    index_bc=shared_index,
                 ).withColumn("chunk", F.lit(i))
                 part.write.mode("overwrite").partitionBy("chunk").parquet(
                     out_path
@@ -427,8 +422,6 @@ def run_pipeline_resumable(
             summary["partitions"].append(f"chunk={i}")
     finally:
         spark.conf.set(conf_key, prior)
-        # the loop's broadcast is dead once the chunks are written
-        shared_index[0].unpersist()
     return summary
 
 
@@ -454,11 +447,9 @@ def run_pipeline_staged(
 ) -> DataFrame:
     """Composed-operator variant of run_pipeline (same result); used
     by tests to assert the fused kernel matches the operator chain."""
-    towers = synthetic.towers_np(25)
-    polys = list(zip(towers[:, 0].astype(np.int64), synthetic.voronoi_polygons(towers)))
     anchored = with_anchor(decode_validate(images))
     zoned = spatial_join.pip_join(
-        anchored, polys, lat_col="lat", lon_col="lon", out_col="zone_id", res=pip_res
+        anchored, tower_polygons(), lat_col="lat", lon_col="lon", out_col="zone_id", res=pip_res
     )
     tiled = zoned.select(
         "zone_id",

@@ -332,8 +332,9 @@ def streaming_image_zone_tile_counts(
 
     This is deliberately the SAME code path as the batch flagship:
     its plan is streaming-legal by construction — one stateless fused
-    mapInArrow (decode + anchor + cell + PIP + tile; broadcasts work
-    per micro-batch), then a single aggregation whose key space
+    mapInArrow (decode + anchor + cell + PIP + tile; the polygon index
+    rides in the kernel closure, so every micro-batch's tasks carry
+    it), then a single aggregation whose key space
     (|zones| x |tiles in the fixture extent|) is bounded, so complete
     -mode state stays a few thousand rows no matter how many shards
     stream in. No code fork between batch and streaming is the point:

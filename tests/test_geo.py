@@ -46,12 +46,17 @@ def test_cell_parent_child_alignment():
 
 def test_cell_ring_counts():
     c = geo.cell_id_np(np.array([35.5]), np.array([139.5]), 8)[0]
-    assert geo.cell_ring(int(c), 0) == [int(c)]
-    assert len(geo.cell_ring(int(c), 1)) == 8
-    assert len(geo.cell_ring(int(c), 2)) == 16
-    # edge clipping: corner cell has a truncated ring
+    block = geo.cell_block(np.array([c]), 8)[0]
+    # own cell (ring 0) plus 8 distinct neighbours (ring 1)
+    assert block[4] == c
+    assert len(set(block.tolist())) == 9 and (block >= 0).all()
+    res, ix, iy = geo.cell_to_xy(int(c))
+    assert {geo.cell_to_xy(int(b)) for b in block} == {
+        (res, ix + dx, iy + dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)
+    }
+    # edge clipping: a corner cell keeps only 3 on-grid neighbours
     corner = geo.xy_to_cell(8, 0, 0)
-    assert len(geo.cell_ring(corner, 1)) == 3
+    assert (geo.cell_block(np.array([corner]), 8)[0] >= 0).sum() == 1 + 3
 
 
 def test_haversine_known_value():
@@ -90,21 +95,6 @@ def test_point_in_polygon_vs_scalar():
         got = geo.point_in_polygon_np(lat, lon, ring)
         want = np.array([scalar_pip(x, y, ring) for x, y in zip(lon, lat)])
         assert (got == want).all()
-
-
-def test_polygon_cover_contains_inside_points():
-    ring = np.array(
-        [[139.2, 35.2], [139.6, 35.25], [139.5, 35.7], [139.25, 35.6]]
-    )
-    cover = set(geo.polygon_cover(ring, 6))
-    rng = np.random.default_rng(5)
-    lat = 35.0 + rng.random(500)
-    lon = 139.0 + rng.random(500)
-    inside = geo.point_in_polygon_np(lat, lon, ring)
-    cells = geo.cell_id_np(lat, lon, 6)
-    for c, isin in zip(cells, inside):
-        if isin:
-            assert int(c) in cover
 
 
 def test_voronoi_polygons_match_nearest_site():

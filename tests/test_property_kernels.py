@@ -54,8 +54,18 @@ def test_pip_np_matches_scalar(points, nverts, rnd):
     assert (got == want).all()
 
 
+def _first_hit(polys, lat: np.ndarray, lon: np.ndarray) -> np.ndarray:
+    """Brute force: first polygon (layer order) containing each point."""
+    want = np.full(len(lat), -1, dtype=np.int64)
+    for pi, (_, ring) in enumerate(polys):
+        hit = geo.point_in_polygon_np(lat, lon, np.asarray(ring))
+        want[(want == -1) & hit] = pi
+    return want
+
+
+# 3-130 towers: candidate sets well past 64 polygons
 @settings(max_examples=30, deadline=None)
-@given(st.integers(min_value=3, max_value=40), st.integers(min_value=4, max_value=10),
+@given(st.integers(min_value=3, max_value=130), st.integers(min_value=4, max_value=10),
        st.lists(st.tuples(lat_st, lon_st), min_size=1, max_size=50))
 def test_polygon_index_matches_bruteforce(n_towers, res, points):
     towers = synthetic.towers_np(n_towers)
@@ -64,13 +74,54 @@ def test_polygon_index_matches_bruteforce(n_towers, res, points):
     lat = np.array([p[0] for p in points])
     lon = np.array([p[1] for p in points])
     cells = geo.cell_id_np(lat, lon, res)
-    got = assign_zone_np(idx, cells, lat, lon)
-    # brute force: first polygon (layer order) containing the point
-    want = np.full(len(points), -1, dtype=np.int64)
-    for pi, (_, ring) in enumerate(polys):
-        hit = geo.point_in_polygon_np(lat, lon, np.asarray(ring))
-        want[(want == -1) & hit] = pi
-    assert (got == want).all()
+    assert (assign_zone_np(idx, cells, lat, lon) == _first_hit(polys, lat, lon)).all()
+
+
+def _square(x0: float, y0: float, x1: float, y1: float) -> np.ndarray:
+    return np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1]])
+
+
+@pytest.mark.parametrize("order", ["AB", "BA", "CA", "AC", "ACB"])
+def test_polygon_index_overlapping_layers_first_hit(order):
+    """Overlapping polygons resolve by layer order: a cell inside a
+    later polygon but crossed by an earlier one's edge must be refined,
+    not answered by the interior lookup. Edges sit off the res-10 grid
+    lines; C lies inside A."""
+    shapes = {
+        "A": _square(139.2013, 35.2017, 139.6031, 35.6043),
+        "B": _square(139.4007, 35.4011, 139.8029, 35.8037),
+        "C": _square(139.3003, 35.3009, 139.4501, 35.4507),
+    }
+    polys = [(k, shapes[k]) for k in order]
+    rng = np.random.default_rng(3)
+    lat = geo.LAT0 + rng.random(20_000) * geo.DLAT
+    lon = geo.LON0 + rng.random(20_000) * geo.DLON
+    idx = PolygonIndex(polys, 10)
+    got = assign_zone_np(idx, geo.cell_id_np(lat, lon, 10), lat, lon)
+    assert (got == _first_hit(polys, lat, lon)).all()
+
+
+@pytest.mark.parametrize("layer", ["empty", "sub_cell", "off_grid", "degenerate", "mixed"])
+def test_polygon_index_without_interior_cells(layer):
+    """Layers with no wholly interior cell (empty, polygons smaller than
+    one cell, off the grid, rings under 3 vertices) build and assign
+    like the brute force."""
+    tiny = _square(139.4, 35.4, 139.6, 35.6)  # 0.2 deg on a 0.25 deg grid
+    layers = {
+        "empty": [],
+        "sub_cell": [("T", tiny)],
+        "off_grid": [("O", _square(150.0, 40.0, 151.0, 41.0))],
+        "degenerate": [("D", tiny[:2])],
+        "mixed": [("D", tiny[:2]), ("T", tiny), ("U", _square(139.45, 35.45, 139.7, 35.7))],
+    }
+    polys = layers[layer]
+    rng = np.random.default_rng(7)
+    lat = geo.LAT0 + rng.random(5_000) * geo.DLAT
+    lon = geo.LON0 + rng.random(5_000) * geo.DLON
+    idx = PolygonIndex(polys, 2)
+    assert idx.stats()["interior_cells"] == 0
+    got = assign_zone_np(idx, geo.cell_id_np(lat, lon, 2), lat, lon)
+    assert (got == _first_hit(polys, lat, lon)).all()
 
 
 @settings(max_examples=50, deadline=None)

@@ -70,6 +70,32 @@ def test_polygon_index_interior_cells_dominate():
     assert st["interior_cells"] > st["boundary_cells"]
 
 
+def test_polygon_index_pickles_under_command_threshold():
+    """The index travels inside the UDF closure; past PySpark's 1 MB
+    command threshold it would be broadcast again. Guard with margin."""
+    import pickle
+
+    idx = spatial_join.PolygonIndex(pipeline.tower_polygons(), res=8)
+    assert len(pickle.dumps(idx)) < 256 * 1024
+
+
+def test_spatial_operators_leave_no_broadcast_files(spark, points):
+    """Repeated PIP, kNN and pipeline calls create no Python broadcast
+    (each one leaves a pickled file in the driver's temp dir until it
+    is destroyed)."""
+    import os
+
+    temp_dir = spark.sparkContext._temp_dir
+    images = synthetic.images_df(spark, 20, partitions=2)
+    pois = synthetic.poi_np(100)
+    before = set(os.listdir(temp_dir))
+    for _ in range(3):
+        spatial_join.pip_join(points, pipeline.tower_polygons(), res=8).count()
+        knn.nearest_site_within(points, pois, radius_m=300.0).count()
+        pipeline.run_pipeline(spark, images).count()
+    assert set(os.listdir(temp_dir)) == before
+
+
 def test_knn_within_radius_matches_bruteforce(spark, points):
     pois = synthetic.poi_np(100)
     got = knn.nearest_site_within(points, pois, radius_m=300.0).collect()
