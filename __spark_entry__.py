@@ -250,11 +250,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # tower-Voronoi layer onto the z13 tile grid — generated grid,
     # zero input scan; NEW oracle semantics -> in-window driver row
     q["zone_raster_z13"] = lambda s, d: _tiling.zone_raster(s, _towers(s, d))
-    # J8 scale path: the Arrow cell-ring kNN kernel (knn.py) — exact
-    # within-radius nearest site. Output is INTEGER ids only: the
-    # kernel's numpy haversine and DuckDB's libm differ in the last
-    # ulp, so distances are compared in pytest with tolerance, not
-    # value-hashed here.
+    # J8 scale path: the cell-ring kNN (knn.py, JVM expressions) —
+    # exact within-radius nearest site. Output is INTEGER ids only: the
+    # shared haversine_sql runs on the JVM's math and DuckDB's libm,
+    # which differ in the last ulp, so distances are compared in
+    # pytest with tolerance, not value-hashed here.
     def _knn_ring(s, d, radius_m=25_000.0):
         import numpy as np
 

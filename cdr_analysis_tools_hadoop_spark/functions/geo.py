@@ -22,6 +22,7 @@ lib/pflow-hiveUDF.jar!HMesh per SURVEY.md §2.9).
 
 from __future__ import annotations
 
+import json
 import math
 
 import numpy as np
@@ -96,8 +97,9 @@ def anchor_lon_np(ids: np.ndarray) -> np.ndarray:
 MAX_RES = 26
 
 
-def cell_id_sql(lat_col: str, lon_col: str, res: int) -> str:
-    """SQL snippet: hierarchical cell id at resolution ``res``.
+def grid_xy_sql(lat_col: str, lon_col: str, res: int) -> tuple[str, str]:
+    """SQL snippets: the (ix, iy) grid position of a point at
+    resolution ``res``, clamped onto the grid like cell_id_np.
 
     Portable: floor/least/greatest/cast + arithmetic only.
     """
@@ -112,6 +114,13 @@ def cell_id_sql(lat_col: str, lon_col: str, res: int) -> str:
         f"least({n - 1}, greatest(0, cast(floor(({lat_col} - {dlit(LAT0)}) / {dlit(DLAT)} * {n})"
         f" as bigint)))"
     )
+    return ix, iy
+
+
+def cell_id_sql(lat_col: str, lon_col: str, res: int) -> str:
+    """SQL snippet: hierarchical cell id at resolution ``res``."""
+    ix, iy = grid_xy_sql(lat_col, lon_col, res)
+    n = 1 << res
     base = res << 54
     return f"({base} + ({ix}) * {n} + ({iy}))"
 
@@ -159,6 +168,112 @@ def find_sorted(keys: np.ndarray, q: np.ndarray) -> np.ndarray:
     ok = pos < len(keys)
     ok[ok] = keys[pos[ok]] == q[ok]
     return np.where(ok, pos, -1)
+
+
+# ---------------------------------------------------------------------------
+# Constant cell tables: a cell -> int lookup the JVM evaluates inside
+# the query plan, with no join, no broadcast and no Python worker.
+#
+# The map is held as runs down each grid column ix: ``starts[ix]`` are
+# the ascending iy at which a run begins (the first is always 0) and
+# ``values[ix]`` the value of each run. The value of cell (ix, iy) is
+# that of the last run starting at or below iy. Each table enters the
+# plan once, as one array literal (Raptor-style rasterised runs, held
+# as plan data).
+
+
+def column_runs(
+    lo: np.ndarray, hi: np.ndarray, values: np.ndarray, res: int, fill: int
+) -> tuple[list[list[int]], list[list[int]]]:
+    """(starts, values) per grid column of the cell -> value map that
+    gives cell ids ``[lo[i], hi[i])`` the value ``values[i]`` (disjoint
+    ranges) and every other cell ``fill``."""
+    n = 1 << res
+    base = np.int64(res) << 54
+    lo = np.asarray(lo, dtype=np.int64) - base
+    hi = np.asarray(hi, dtype=np.int64) - base
+    # split each range where it crosses into the next grid column
+    c0, c1 = lo // n, (hi - 1) // n
+    k = c1 - c0 + 1
+    col = np.repeat(c0, k) + np.arange(k.sum()) - np.repeat(np.cumsum(k) - k, k)
+    start = np.maximum(np.repeat(lo, k), col * n) - col * n
+    end = np.minimum(np.repeat(hi, k), (col + 1) * n) - col * n
+    val = np.repeat(np.asarray(values, dtype=np.int64), k)
+    # run starts; ``fill`` opens every column and resumes after every
+    # range, unless a range starts at that same cell
+    gap = end < n
+    ev_col = np.concatenate([np.arange(n), col[gap], col])
+    ev_iy = np.concatenate([np.zeros(n, dtype=np.int64), end[gap], start])
+    ev_val = np.concatenate([np.full(n + int(gap.sum()), fill), val])
+    ranged = np.concatenate([np.zeros(n + int(gap.sum()), dtype=bool), np.ones(len(col), dtype=bool)])
+    order = np.lexsort((ranged, ev_iy, ev_col))
+    ev_col, ev_iy, ev_val = ev_col[order], ev_iy[order], ev_val[order]
+    last = np.ones(len(ev_col), dtype=bool)
+    last[:-1] = (ev_col[1:] != ev_col[:-1]) | (ev_iy[1:] != ev_iy[:-1])
+    ev_col, ev_iy, ev_val = ev_col[last], ev_iy[last], ev_val[last]
+    # a run with its predecessor's value is no run
+    new = np.ones(len(ev_col), dtype=bool)
+    new[1:] = (ev_col[1:] != ev_col[:-1]) | (ev_val[1:] != ev_val[:-1])
+    ev_col, ev_iy, ev_val = ev_col[new], ev_iy[new], ev_val[new]
+    cuts = np.searchsorted(ev_col, np.arange(1, n))
+    return (
+        [a.tolist() for a in np.split(ev_iy, cuts)],
+        [a.tolist() for a in np.split(ev_val, cuts)],
+    )
+
+
+def candidate_slots(ptr: np.ndarray, items: np.ndarray) -> tuple[np.ndarray, list[list[int]]]:
+    """Slot of each CSR list ``items[ptr[i]:ptr[i + 1]]`` and the
+    distinct lists in slot order: equal lists share one slot, so a
+    table of cells holds each candidate list once."""
+    slots: dict[tuple, int] = {}
+    slot = [
+        slots.setdefault(tuple(items[a:b].tolist()), len(slots))
+        for a, b in zip(ptr[:-1].tolist(), ptr[1:].tolist())
+    ]
+    return np.asarray(slot, dtype=np.int64), [list(t) for t in slots]
+
+
+def tables_sql(tables: dict[str, tuple[list, str]]) -> str:
+    """SQL literal of named constant tables ``{name: (rows, sql_type)}``
+    as one struct: ``from_json`` over their JSON text (floats go
+    through repr, which round-trips exactly), as a scalar subquery.
+    The optimizer inlines the subquery and folds it into constant
+    arrays; until then the subquery keeps ConvertToLocalRelation,
+    which runs before constant folding, from parsing the JSON once per
+    row of a local input. Spark allows no subquery inside a
+    higher-order function, so the struct is bound to a column first."""
+    text = json.dumps(
+        {name: rows for name, (rows, _) in tables.items()},
+        separators=(",", ":"),
+        allow_nan=False,
+    )
+    text = text.replace("\\", "\\\\").replace("'", "\\'")
+    schema = ",".join(f"{name}:{sql_type}" for name, (_, sql_type) in tables.items())
+    return f"(SELECT from_json('{text}', 'struct<{schema}>'))"
+
+
+def lookup_xy_sql(lat_col: str, lon_col: str, res: int) -> tuple[str, str]:
+    """SQL snippets: the (ix, iy) at which cell_lookup_sql reads a point;
+    ix is NULL for a NULL or NaN coordinate, so its lookup is NULL too
+    (a NULL iy alone would match no run, and element_at(…, 0) raises
+    under ANSI)."""
+    ix, iy = grid_xy_sql(lat_col, lon_col, res)
+    return (
+        f"CASE WHEN {lat_col} IS NULL OR isnan({lat_col}) OR isnan({lon_col})"
+        f" THEN NULL ELSE {ix} END",
+        iy,
+    )
+
+
+def cell_lookup_sql(ix: str, iy: str, starts: str, values: str) -> str:
+    """SQL snippet: the value of cell (ix, iy) in a column_runs table
+    whose ``starts``/``values`` are bound to columns."""
+    col = f"cast({ix} as int) + 1"
+    return (
+        f"element_at(element_at({values}, {col}),"
+        f" size(filter(element_at({starts}, {col}), __s -> __s <= {iy})))"
+    )
 
 
 def cell_size_m(res: int) -> float:
@@ -263,8 +378,9 @@ def point_in_polygon_np(lat: np.ndarray, lon: np.ndarray, ring: np.ndarray) -> n
     """Vectorized even-odd ray casting.
 
     ``ring``: (k, 2) array of (lon, lat) vertices, closed or open.
-    Returns boolean mask for (n,) points. Pure numpy; used inside
-    Arrow-batched pandas UDFs — never per-row Python.
+    Returns boolean mask for (n,) points. Pure numpy; the fused
+    pipeline kernel runs it per batch, and it is the reference of
+    point_in_ring_sql.
     """
     px = np.asarray(lon, dtype=np.float64)
     py = np.asarray(lat, dtype=np.float64)
@@ -283,6 +399,31 @@ def point_in_polygon_np(lat: np.ndarray, lon: np.ndarray, ring: np.ndarray) -> n
             xin = (x2 - x1) * (py - y1) / (y2 - y1) + x1
         inside ^= cond & (px < xin)
     return inside
+
+
+def closed_ring(ring: np.ndarray) -> tuple[list[float], list[float]]:
+    """(xs, ys) of a (k, 2) lon/lat ring with the first vertex repeated
+    last, as point_in_polygon_np closes it."""
+    ring = np.asarray(ring, dtype=np.float64).reshape(-1, 2)
+    if len(ring) and (ring[0] != ring[-1]).any():
+        ring = np.vstack([ring, ring[:1]])
+    return ring[:, 0].tolist(), ring[:, 1].tolist()
+
+
+def point_in_ring_sql(lat_col: str, lon_col: str, xs: str, ys: str) -> str:
+    """SQL twin of point_in_polygon_np against one closed ring held as
+    the SQL arrays ``xs``/``ys`` (lon, lat; first vertex repeated last,
+    at least 4 entries). Same operations in the same order, so the
+    result is bit-identical. The division runs only where the edge
+    straddles the ray (y1 != y2): ANSI raises on division by zero."""
+    x1, x2 = f"element_at({xs}, __i)", f"element_at({xs}, __i + 1)"
+    y1, y2 = f"element_at({ys}, __i)", f"element_at({ys}, __i + 1)"
+    return (
+        f"aggregate(sequence(1, size({xs}) - 1), false, (__in, __i) -> "
+        f"CASE WHEN ({y1} > {lat_col}) != ({y2} > {lat_col}) "
+        f"THEN __in != ({lon_col} < ({x2} - {x1}) * ({lat_col} - {y1}) / ({y2} - {y1}) + {x1}) "
+        f"ELSE __in END)"
+    )
 
 
 def polygon_bbox(ring: np.ndarray) -> tuple[float, float, float, float]:

@@ -5,29 +5,28 @@ to the nearest POI within REALLOCATE_RADIUS=300 m (constant verified
 in the jar bytecode, reference lib/pflow-hiveUDF.jar; invoked by
 queries/interpolation/insert_poi_relocation.sql:1-3). The reference
 re-reads a sideloaded TSV inside every UDF call; here the site layer
-is compiled ONCE into a cell->sites index of numpy arrays, shipped to
-the tasks inside the kernel closure (no broadcast variable to manage),
-and probed with ring expansion:
+is compiled ONCE per query into a cell index (``SiteIndex``, numpy
+CSR) at the finest resolution whose cell edge covers the radius:
 
-  ring 0: the point's own cell; ring k: cells at Chebyshev distance k.
-  After scanning ring k, any candidate at distance <= k * cell_edge is
-  provably optimal (no site in ring >k can be closer), so expansion
-  stops early — exact kNN, O(sites-in-neighborhood) per point instead
-  of O(all sites).
+  ring 0: the point's own cell; ring 1: its 8 neighbours. A site
+  within the radius of a point is always in the point's 3x3 block,
+  so the block's sites are the exact candidate set.
 
-Everything is Arrow-batched numpy (mapInPandas); the index scales to
-millions of sites because only cell-local candidates are touched (once
-the closure pickles past 1 MB, PySpark broadcasts the command itself).
+``nearest_site_within`` turns the index into constant tables in the
+query plan (geo.column_runs / geo.tables_sql): per grid column, runs
+of slots into the distinct candidate lists of the cells' 3x3 blocks,
+plus the sites. Each row then runs as JVM expressions: one cell
+lookup, distances to the block's candidates with geo.haversine_sql or
+geo.planar_d2_sql, radius filter, then the oracle's tie rule. No
+Python worker, no broadcast, no join; work per point is proportional
+to the sites in its neighbourhood, not the layer.
 """
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType
 
 from ..functions import geo
 
@@ -73,6 +72,27 @@ def pick_res_for_radius(radius_m: float) -> int:
     )
 
 
+def _candidate_table(idx: SiteIndex) -> tuple[list, list, list]:
+    """(starts, values, candidates) of the layer's cell table: the run
+    value of a cell is a slot into ``candidates``, the sites (as index
+    positions) of its 3x3 block. Slot 0 is the empty list; cells with
+    equal candidate lists share a slot."""
+    # every occupied cell j offers its sites to each cell of its block
+    block = geo.cell_block(idx.uc, idx.res).ravel()
+    owner = np.repeat(np.arange(len(idx.uc)), 9)[block >= 0]
+    block = block[block >= 0]
+    cnt = idx.ends[owner] - idx.starts[owner]
+    first = idx.starts[owner] - np.cumsum(cnt) + cnt
+    pair_cell = np.repeat(block, cnt)
+    pair_site = idx.order[np.repeat(first, cnt) + np.arange(cnt.sum())]
+    order = np.lexsort((pair_site, pair_cell))
+    pair_cell, pair_site = pair_cell[order], pair_site[order]
+    cells, ptr = np.unique(pair_cell, return_index=True)
+    slot, candidates = geo.candidate_slots(np.append(ptr, len(pair_cell)), pair_site)
+    starts, vals = geo.column_runs(cells, cells + 1, slot + 1, idx.res, fill=0)
+    return starts, vals, [[]] + candidates
+
+
 def nearest_site_within(
     df: DataFrame,
     sites: np.ndarray,
@@ -84,82 +104,52 @@ def nearest_site_within(
     metric: str = "haversine",
 ) -> DataFrame:
     """k=1 within-radius lookup (the TurkcellReallocation semantics):
-    nearest site id + distance, or nulls when none within radius."""
+    nearest site id + distance, or nulls when none within radius (or
+    when a coordinate is NULL or NaN)."""
     res = pick_res_for_radius(radius_m)
     idx = SiteIndex(np.asarray(sites, dtype=np.float64), res)
-    dist_fn = geo.haversine_np if metric == "haversine" else (
-        lambda a, b, c, d: np.sqrt(geo.planar_d2_np(a, b, c, d)) * geo.M_PER_DEG
+    starts, vals, candidates = _candidate_table(idx)
+    sites = [
+        {"id": i, "lat": a, "lon": o}
+        for i, a, o in zip(idx.ids.tolist(), idx.lat.tolist(), idx.lon.tolist())
+    ]
+    tables = geo.tables_sql({
+        "starts": (starts, "array<array<int>>"),
+        "vals": (vals, "array<array<int>>"),
+        "cands": (candidates, "array<array<int>>"),
+        "sites": (sites, "array<struct<id:bigint,lat:double,lon:double>>"),
+    })
+    slot = geo.cell_lookup_sql(*geo.lookup_xy_sql(lat_col, lon_col, res), "__knn.starts", "__knn.vals")
+    # site __j of the point's 3x3 cell block
+    site = "element_at(__knn.sites, __j + 1)"
+    if metric == "haversine":
+        dist = geo.haversine_sql(lat_col, lon_col, f"{site}.lat", f"{site}.lon")
+    else:
+        d2 = geo.planar_d2_sql(lat_col, lon_col, f"{site}.lat", f"{site}.lon")
+        dist = f"(sqrt({d2}) * {geo.dlit(geo.M_PER_DEG)})"
+    # the candidates within the radius, as (distance, site id): the
+    # oracle's `WHERE dist <= radius` applies to each site's own
+    # distance before any ordering
+    near = (
+        f"filter(transform(element_at(__knn.cands, {slot} + 1), "
+        f"__j -> named_struct('d', {dist}, 'id', {site}.id)), "
+        f"__x -> __x.d <= {geo.dlit(float(radius_m))})"
     )
-
-    def kernel(batches):
-        for pdf in batches:
-            lat = pdf[lat_col].to_numpy(dtype=np.float64)
-            lon = pdf[lon_col].to_numpy(dtype=np.float64)
-            best_id = np.full(len(pdf), -1, dtype=np.int64)
-            best_d = np.full(len(pdf), np.inf)
-            cells = geo.cell_id_np(lat, lon, idx.res)
-            uniq, inv = np.unique(cells, return_inverse=True)
-            order = np.argsort(inv, kind="stable")
-            starts = np.searchsorted(inv[order], np.arange(len(uniq)))
-            ends = np.append(starts[1:], len(inv))
-            # ring 0 + ring 1 always suffice: cell edge >= radius; only
-            # cells with a site in that 3x3 block enter the loop
-            slot = geo.find_sorted(idx.uc, geo.cell_block(uniq, idx.res))
-            near = slot >= 0
-            for ci in np.flatnonzero(near.any(axis=1)):
-                cand_idx = np.concatenate(
-                    [idx.order[idx.starts[j]:idx.ends[j]] for j in slot[ci, near[ci]]]
-                )
-                rows = order[starts[ci]:ends[ci]]
-                d = dist_fn(
-                    lat[rows, None], lon[rows, None],
-                    idx.lat[cand_idx][None, :], idx.lon[cand_idx][None, :],
-                )
-                # Emulate the oracle's `WHERE dist <= radius ORDER BY
-                # (dist, site_id) LIMIT 1` exactly: the radius filter
-                # applies to each SITE's own distance BEFORE ordering,
-                # so mask out-of-radius candidates first, then take the
-                # minimum over the survivors.
-                in_r = d <= radius_m
-                d_masked = np.where(in_r, d, np.inf)
-                dm = d_masked.min(axis=1)
-                # tie-break like the oracle's ORDER BY (distance,
-                # site_id): among in-radius candidates within a
-                # RELATIVE (FP-noise-scale) epsilon of the row minimum
-                # take the SMALLEST site id. A bare argmin picks
-                # first-in-candidate-order, which flips on duplicate-
-                # coordinate sites or ulp-level numpy-vs-libm
-                # differences; an absolute epsilon (r2's 1e-6 m) would
-                # also collapse DISTINCT sites a micron apart and could
-                # emit a distance a hair past the radius.
-                ids_c = idx.ids[cand_idx]
-                close = in_r & (d_masked <= dm[:, None] * (1.0 + 1e-12))
-                tie_id = np.where(
-                    close, ids_c[None, :], np.iinfo(np.int64).max
-                ).min(axis=1)
-                # report the CHOSEN site's own distance (not the row
-                # minimum): the emitted (site_id, dist) pair must
-                # belong to one site, as the oracle's ORDER BY
-                # (distance, site_id) row does
-                sel = close & (ids_c[None, :] == tie_id[:, None])
-                chosen_d = d[np.arange(d.shape[0]), sel.argmax(axis=1)]
-                ok = np.isfinite(dm)
-                best_id[rows[ok]] = tie_id[ok]
-                best_d[rows[ok]] = chosen_d[ok]
-            out = pdf.copy()
-            out["__site_id"] = best_id
-            out["__site_d"] = np.where(np.isfinite(best_d), best_d, np.nan)
-            yield out
-
-    from pyspark.sql.types import StructField, StructType
-
-    schema = StructType(
-        list(df.schema.fields)
-        + [StructField("__site_id", LongType()), StructField("__site_d", DoubleType())]
+    # tie-break like the oracle's ORDER BY (distance, site_id): among
+    # candidates within a RELATIVE (FP-noise-scale) epsilon of the
+    # minimum (the first after sorting) take the SMALLEST site id, and
+    # report that site's own distance. An absolute epsilon would
+    # collapse DISTINCT sites a micron apart and could emit a distance
+    # a hair past the radius.
+    pick = (
+        f"aggregate(array_sort({near}), CAST(NULL AS STRUCT<dm: DOUBLE, id: BIGINT, d: DOUBLE>), "
+        "(__a, __x) -> CASE WHEN __a IS NULL THEN named_struct('dm', __x.d, 'id', __x.id, 'd', __x.d) "
+        f"WHEN __x.d <= __a.dm * {geo.dlit(1.0 + 1e-12)} AND __x.id < __a.id "
+        "THEN named_struct('dm', __a.dm, 'id', __x.id, 'd', __x.d) ELSE __a END)"
     )
-    got = df.mapInPandas(kernel, schema=schema)
-    return got.select(
-        *[F.col(c) for c in df.columns],
-        F.when(F.col("__site_id") >= 0, F.col("__site_id")).alias(id_out),
-        F.col("__site_d").alias(dist_out),
+    return (
+        df.withColumn("__knn", F.expr(tables))
+        .withColumn("__pick", F.expr(pick))
+        .withColumns({id_out: F.col("__pick.id"), dist_out: F.col("__pick.d")})
+        .drop("__knn", "__pick")
     )

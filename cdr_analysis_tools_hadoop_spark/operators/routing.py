@@ -279,14 +279,15 @@ def shortest_paths(pairs: DataFrame, graph_bc) -> DataFrame:
 
 def osm_node_snapper(graph: RoadGraph, radius_m: float = 25_000.0):
     """Node snapper for arbitrary (e.g. OSM-extract) graphs: nearest
-    graph node via the Arrow cell-ring kNN kernel (knn.py) — the
-    closed-form grid snap only exists for the synthetic grid.
+    graph node via the cell-ring kNN (knn.py) — the closed-form grid
+    snap only exists for the synthetic grid.
 
     ``radius_m`` must stay at or below the coarsest MINIMUM cell edge
     (geo.cell_size_m(0), ~90.6 km): past that the ring-1 coverage
-    guarantee breaks AND every batch brute-forces a (rows x
-    all-nodes) distance matrix — the failure mode a planet extract
-    would hit. 25 km covers any realistic node spacing."""
+    guarantee breaks. Near that limit the grid has only a few cells,
+    so every point scores every node of its block — the failure mode a
+    planet extract would hit. 25 km covers any realistic node
+    spacing."""
     from ..functions import geo as _geo
 
     if radius_m > _geo.cell_size_m(0):
@@ -316,7 +317,7 @@ def route_interpolation_network(
     """Route every consecutive-point leg over the road graph.
 
     Plan: window legs (JVM) -> node snap (closed-form JVM arithmetic
-    for the grid graph; cell-ring kNN kernel via ``node_snapper`` for
+    for the grid graph; cell-ring kNN via ``node_snapper`` for
     arbitrary/OSM graphs) -> DISTINCT node pairs -> Dijkstra path
     cache (the ONLY per-pair Python stage) -> broadcast join back ->
     explode path vertices with time by cumulative-length fraction

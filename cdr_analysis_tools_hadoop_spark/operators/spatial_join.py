@@ -7,33 +7,34 @@ initial_hive_commands_od.json:13-14). Design per BASELINE.json
 north_star:
 
 1. The polygon layer (a DIMENSION: zones, admin boundaries) is
-   compiled driver-side into a cell index at a chosen resolution:
+   compiled driver-side into a cell index at a chosen resolution
+   (``PolygonIndex``, numpy arrays only):
    - interior cells  -> polygon id decided, no per-point work; stored
      as runs of consecutive cell ids (grid column segments)
    - boundary cells  -> candidate polygon list, per-point ray cast
    The cover is exact: a cell is interior iff all 4 corners are
    inside AND no polygon edge intersects the cell rectangle.
-2. The index is plain numpy arrays (about 100 KB for 25 Voronoi
-   zones at res 8), captured in the UDF closure: Spark ships it in
-   the task binary and frees it with the job, so there is no
-   broadcast variable to create or destroy, and no shuffle. A layer
-   whose index pickles past the 1 MB
-   spark.broadcast.UDFCompressionThreshold is still correct: PySpark
-   then broadcasts the pickled command itself.
-3. Fact rows compute their cell id JVM-side (codegen expression) and
-   are refined in an Arrow-batched pandas UDF: one numpy ray-cast
-   call per (candidate polygon x batch), never per row.
+2. ``pip_join`` turns the index into constant tables in the query
+   plan (geo.column_runs / geo.tables_sql): per grid column, the run
+   starts and run values (an interior polygon or a boundary slot),
+   the candidate list of each slot, and each ring's coordinates once.
+   About 34 KB of SQL text for 25 Voronoi zones at res 8.
+3. Every row then runs as JVM expressions in one map-only stage: the
+   cell lookup decides interior rows (96% of them on the tower layer);
+   boundary rows ray-cast their candidates in layer order with
+   geo.point_in_ring_sql, the bit-identical twin of the numpy ray
+   cast. No Python worker, no broadcast, no join, no shuffle.
 
-At 10^12 rows this is a map-only stage — zero shuffle — with work
-proportional to boundary-cell density only. Hotspot polygons (a huge
-Voronoi cell around a downtown tower) are handled by RESOLUTION, not
-row salting: raise `res` until boundary cells are thin.
+``assign_zone_np`` is the same lookup in numpy: the fused image
+pipeline runs it inside its Arrow kernel, and the tests hold the JVM
+path to it. Hotspot polygons (a huge Voronoi cell around a downtown
+tower) are handled by RESOLUTION, not row salting: raise `res` until
+boundary cells are thin.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -92,8 +93,8 @@ def _edges_cross_cells(
 
 class PolygonIndex:
     """Driver-side compiled cell index of a polygon layer, held in
-    numpy arrays only so that it pickles small enough to travel inside
-    a UDF closure.
+    numpy arrays only: it travels in the fused pipeline's kernel
+    closure, and pip_join turns it into plan constants.
 
     Cell ids are ``(res << 54) + ix * 2^res + iy``, so consecutive ids
     walk a grid column:
@@ -196,8 +197,8 @@ class PolygonIndex:
 
 
 def assign_zone_np(idx: PolygonIndex, cells: np.ndarray, lat: np.ndarray, lon: np.ndarray) -> np.ndarray:
-    """Vectorized polygon assignment (-1 = none) shared by the
-    pip_join UDF and the fused benchmark kernel: interior cells via
+    """Vectorized polygon assignment (-1 = none): the fused pipeline
+    kernel's PIP and the reference of pip_join. Interior cells via
     one searchsorted over the runs, boundary rows via one ray cast per
     candidate polygon present in the batch, in layer order (first hit
     wins)."""
@@ -227,6 +228,20 @@ def assign_zone_np(idx: PolygonIndex, cells: np.ndarray, lat: np.ndarray, lon: n
     return out
 
 
+def _zone_table(index: PolygonIndex) -> tuple[list, list, list]:
+    """(starts, values, candidates) of the layer's cell table: a run
+    value ``p >= 0`` is interior polygon ``p``, -1 no polygon, and
+    ``-2 - k`` a boundary cell whose candidate polygons (layer order)
+    are ``candidates[k]``; cells with equal candidates share ``k``."""
+    slot, candidates = geo.candidate_slots(index.bnd_ptr, index.bnd_poly)
+    lo = np.concatenate([index.run_lo, index.bnd_cells])
+    hi = np.concatenate([index.run_hi, index.bnd_cells + 1])
+    values = np.concatenate([index.run_poly, -2 - slot])
+    order = np.argsort(lo, kind="stable")
+    starts, vals = geo.column_runs(lo[order], hi[order], values[order], index.res, fill=-1)
+    return starts, vals, candidates
+
+
 def pip_join(
     df: DataFrame,
     polys: list[tuple[object, np.ndarray]],
@@ -237,45 +252,42 @@ def pip_join(
 ) -> DataFrame:
     """Attach the containing polygon's id (or null) to every row.
 
-    Map-only: cell id is computed JVM-side; the Arrow kernel touches
-    only boundary-cell rows with real geometry work.
+    Map-only JVM expressions: a cell-table lookup decides interior
+    rows; boundary rows ray-cast their cell's candidate polygons in
+    layer order, first hit wins. NULL or NaN coordinates get null.
     """
     index = PolygonIndex(polys, res)
-    id_strs = [str(p) for p in index.ids]
-
-    work = df.withColumn("__cell", F.expr(geo.cell_id_sql(lat_col, lon_col, res)))
-
-    # Scalar pandas UDF over ONLY (cell, lat, lon): Spark's
-    # ArrowEvalPython ships just the 3 argument columns (24 B/row) to
-    # the worker and stitches the result back positionally — every
-    # passthrough column (ids, captions, decode stats, ...) stays
-    # JVM-side. The previous mapInPandas variant round-tripped the
-    # WHOLE row through pandas (with a per-batch DataFrame copy) and
-    # was 3x the Python CPU of the decode stage itself.
-    from pyspark.sql.types import LongType
-
-    @F.pandas_udf(LongType())
-    def refine(cells_s: pd.Series, lat_s: pd.Series, lon_s: pd.Series) -> pd.Series:
-        # the index rides in this closure, i.e. in the task binary
-        out = assign_zone_np(
-            index,
-            cells_s.to_numpy(dtype=np.int64),
-            lat_s.to_numpy(dtype=np.float64),
-            lon_s.to_numpy(dtype=np.float64),
-        )
-        return pd.Series(out)
-
-    # __pidx -> id string via an array literal (element_at is 1-based;
-    # __pidx = -1 i.e. "no polygon" indexes nothing -> NULL). Pure JVM
-    # expression — no broadcast-join stage for the id restore.
-    ids_arr = F.array(*[F.lit(s) for s in id_strs])
-    refined = work.withColumn(
-        "__pidx", refine(F.col("__cell"), F.col(lat_col), F.col(lon_col))
+    starts, vals, candidates = _zone_table(index)
+    rings = [geo.closed_ring(r) for r in index.rings]
+    tables = geo.tables_sql({
+        "starts": (starts, "array<array<int>>"),
+        "vals": (vals, "array<array<int>>"),
+        "cands": (candidates, "array<array<int>>"),
+        "xs": ([x for x, _ in rings], "array<array<double>>"),
+        "ys": ([y for _, y in rings], "array<array<double>>"),
+        "ids": ([str(p) for p in index.ids], "array<string>"),
+    })
+    ix, iy = geo.lookup_xy_sql(lat_col, lon_col, res)
+    cell = geo.cell_lookup_sql("__ix", "__iy", "__pip.starts", "__pip.vals")
+    # a boundary cell's candidates in layer order, each with its ring;
+    # the first that contains the point wins, NULL when none does
+    cands = (
+        "transform(element_at(__pip.cands, -1 - __cell), __p -> named_struct('p', __p, "
+        "'xs', element_at(__pip.xs, __p + 1), 'ys', element_at(__pip.ys, __p + 1)))"
     )
-    return refined.withColumn(
-        out_col,
-        F.when(
-            F.col("__pidx") >= 0,
-            F.element_at(ids_arr, (F.col("__pidx") + F.lit(1)).cast("int")),
-        ),
-    ).drop("__pidx", "__cell")
+    inside = geo.point_in_ring_sql(lat_col, lon_col, "__c.xs", "__c.ys")
+    first_hit = (
+        f"aggregate({cands}, CAST(NULL AS INT), (__hit, __c) -> "
+        f"CASE WHEN __hit IS NOT NULL THEN __hit WHEN {inside} THEN __c.p END)"
+    )
+    zone = (
+        "element_at(__pip.ids, CASE WHEN __cell >= 0 THEN __cell + 1 "
+        f"WHEN __cell <= -2 THEN {first_hit} + 1 END)"
+    )
+    # the tables, the grid position and the lookup are each bound once
+    return (
+        df.select("*", F.expr(tables).alias("__pip"), F.expr(ix).alias("__ix"), F.expr(iy).alias("__iy"))
+        .withColumn("__cell", F.expr(cell))
+        .withColumn(out_col, F.expr(zone))
+        .drop("__pip", "__ix", "__iy", "__cell")
+    )

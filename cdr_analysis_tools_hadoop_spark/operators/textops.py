@@ -1012,7 +1012,7 @@ def token_length_quantiles_oracle(
         "sum(cnt) OVER (PARTITION BY source) AS n_docs, "
         "min(n_tokens) OVER (PARTITION BY source) AS min_tokens, "
         "max(n_tokens) OVER (PARTITION BY source) AS max_tokens FROM h) "
-        f"SELECT source, n_docs, min_tokens, max_tokens, {pcols} "
+        f"SELECT source, CAST(n_docs AS BIGINT) AS n_docs, min_tokens, max_tokens, {pcols} "
         "FROM c GROUP BY 1, 2, 3, 4"
     )
 
@@ -1382,10 +1382,10 @@ def corpus_report_oracle(
         f"q AS (SELECT *, {_QUALITY_SCORE} AS quality_millis, "
         "row_number() OVER (PARTITION BY text_hash ORDER BY doc_id) > 1"
         " AS is_dup FROM base) "
-        "SELECT source, count(*) AS n_docs, sum(n_tokens) AS n_tokens, "
-        "1000000 * sum(CASE WHEN is_dup THEN 1 ELSE 0 END) // count(*)"
+        "SELECT source, count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS n_tokens, "
+        "CAST(1000000 * sum(CASE WHEN is_dup THEN 1 ELSE 0 END) // count(*) AS BIGINT)"
         " AS dup_ppm, "
-        "1000000 * sum(CASE WHEN has_pii THEN 1 ELSE 0 END) // count(*)"
+        "CAST(1000000 * sum(CASE WHEN has_pii THEN 1 ELSE 0 END) // count(*) AS BIGINT)"
         " AS pii_ppm, "
         "round(sum(quality_millis) / count(*), 6) AS avg_quality_millis "
         "FROM q GROUP BY source"

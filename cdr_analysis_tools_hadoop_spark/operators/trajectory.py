@@ -231,19 +231,27 @@ def od_sum_dp(
     epsilon: float = OD_DP_EPSILON,
     seed: int = OD_DP_SEED,
 ) -> DataFrame:
-    """Event-level ε-DP OD-matrix release: the A13 rollup's trip
-    counts with Laplace(1/ε) noise per (pdt, origin, dest) cell —
-    the perturbative sibling of od_sum_kanon's suppressive gate (a
-    release pipeline typically offers both: suppression preserves
-    exact large cells, DP bounds what ANY cell reveals).
+    """Edge-level ε-DP OD-matrix release: the A13 rollup's trip counts
+    with Laplace(1/ε) noise per (pdt, origin, dest) cell — the
+    perturbative sibling of od_sum_kanon's suppressive gate (a release
+    pipeline typically offers both: suppression preserves exact large
+    cells, DP bounds what ANY cell reveals).
 
-    Sensitivity 1: one trip edge lands in exactly one cell. The
-    distinct-user column is dropped — user counts have unbounded
-    event-level sensitivity and are precisely the identifying signal.
+    Sensitivity 1 holds per trip EDGE: one edge lands in exactly one
+    cell. It does not hold per event: edges come from lag/lead
+    adjacency of a user's events plus an argmax home site, so adding
+    or removing one event can create, drop or re-route several edges
+    (and moving the home site re-labels all of that user's edges).
+    Event- or user-level DP would need each user's contribution capped
+    first. The distinct-user column is dropped — user counts have
+    unbounded sensitivity and are precisely the identifying signal.
+
     The draw is seeded from the cell key (md5-int → the shared
     inverse-CDF in zones.laplace_noise_sql) so reruns and both gate
-    engines reproduce it; a production release swaps in a private
-    RNG, keeping mechanism and calibration.
+    engines reproduce it. With the seed and the key known, anyone can
+    recompute and subtract the noise: an artifact released from this
+    function gives NO privacy. A real release swaps in a private RNG,
+    keeping mechanism and calibration.
 
     Scale shape: identical to od_sum (one partial-aggregated groupBy)
     plus a zero-shuffle codegen noise projection on the |cells|-row

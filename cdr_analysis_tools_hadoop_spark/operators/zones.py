@@ -149,21 +149,24 @@ def laplace_noise_sql(id_col: str, scale: float, seed: int = DP_SEED) -> str:
 def dp_zone_counts(
     zoned: DataFrame, epsilon: float = DP_EPSILON, seed: int = DP_SEED
 ) -> DataFrame:
-    """(zone_id, noisy_events): event-level ε-DP release of the
-    zone-population histogram via the Laplace mechanism.
+    """(zone_id, noisy_events): the Laplace mechanism for event-level
+    ε-DP on the zone-population histogram (private only with a private
+    RNG, see below).
 
     Calibration is the textbook one (Dwork et al., TCC'06): one event
     changes one zone count by 1, so sensitivity is 1 and each count
-    gets independent Laplace(1/ε) noise. The DRAW is deterministic —
-    seeded from (zone_id, seed) so reruns, resumes, and both engines
-    of the correctness gate reproduce it bit-for-bit; a production
-    release would swap the seeded uniform for a private RNG (one-line
-    change in laplace_noise_sql) while keeping this exact mechanism
-    and scale. Zones with zero events emit no row (they never enter
-    the aggregate) — a full-domain release would union the zone
-    dimension in first; the histogram-of-present-zones form is what
-    the reference's zone_population computes, so that is what gets
-    noised.
+    gets Laplace(1/ε) noise. The DRAW is not private randomness: it is
+    a deterministic function of (zone_id, seed), so reruns, resumes,
+    and both engines of the correctness gate reproduce it
+    bit-for-bit — and so can anyone who knows the seed, who can then
+    subtract the noise. A committed artifact from this function gives
+    NO privacy; a production release would swap the seeded uniform for
+    a private RNG (one-line change in laplace_noise_sql) while keeping
+    this exact mechanism and scale. Zones with zero events emit no row
+    (they never enter the aggregate) — a full-domain release would
+    union the zone dimension in first; the histogram-of-present-zones
+    form is what the reference's zone_population computes, so that is
+    what gets noised.
 
     Scale shape: one partial-aggregated groupBy on zone_id (the only
     fact-scale work), then the noise term is a zero-shuffle codegen

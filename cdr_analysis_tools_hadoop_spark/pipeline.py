@@ -179,11 +179,11 @@ def run_pipeline(
     zone assignment and tile assignment all run inside ONE mapInArrow
     kernel, emitting only 5 small int columns per row; Spark finishes
     with a codegen'd two-phase hash aggregate (map-side partial +
-    one tiny shuffle). Rationale, measured on this sandbox at 480k
-    images: the staged plan (mapInArrow decode -> JVM anchor ->
-    ArrowEvalPython PIP) spins up TWO python worker pools and pays
-    two Arrow round trips; worker-side framework cost was ~2x the
-    actual numpy kernel cost. One python stage halves that and makes
+    one tiny shuffle). Rationale, measured at 480k images when the
+    staged plan still ran PIP in Python (mapInArrow decode -> JVM
+    anchor -> ArrowEvalPython PIP): TWO python worker pools and two
+    Arrow round trips, whose framework cost was ~2x the actual numpy
+    kernel cost. One python stage halves that and makes
     the job scan -> map -> 17 MB shuffle -> 3k rows, which is also
     exactly the shape that scales to 10^12 rows on a real cluster
     (map-only until a trivially small aggregate).
@@ -191,8 +191,9 @@ def run_pipeline(
     The composable operators (decode_validate, pip_join) remain the
     building blocks for ad-hoc queries; this fusion is the benchmark/
     production path for the full-table rollup. Both paths share the
-    same kernels (codec.decode, PolygonIndex, assign_zone_np, *_np
-    geo math), and tests assert fused == staged. The PolygonIndex
+    same kernels (codec.decode, PolygonIndex, *_np geo math; pip_join
+    evaluates the PolygonIndex as JVM expressions, bit-identical to
+    assign_zone_np), and tests assert fused == staged. The PolygonIndex
     rides in the kernel closure, so Spark ships it in the task binary
     and frees it with the job.
     """

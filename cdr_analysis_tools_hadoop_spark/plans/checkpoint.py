@@ -38,6 +38,7 @@ import hashlib
 import json
 import os
 import time
+import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -50,11 +51,27 @@ def _manifest_path(path: str) -> str:
 
 
 def read_manifest(path: str) -> list[dict]:
+    """Committed records, in append order. Every append ends its lines
+    with a newline, so text after the last newline is a torn append (a
+    kill inside append_manifest): it is skipped with a warning, and a
+    resume redoes its partitions. An unparsable complete line is
+    corruption and raises."""
     mp = _manifest_path(path)
     if not os.path.exists(mp):
         return []
     with open(mp) as f:
-        return [json.loads(line) for line in f if line.strip()]
+        body, _, torn = f.read().rpartition("\n")
+    if torn.strip():
+        warnings.warn(f"{mp}: skipping a torn final line ({len(torn)} chars)")
+    records = []
+    for i, line in enumerate(body.split("\n")):
+        if not line.strip():
+            continue
+        try:
+            records.append(json.loads(line))
+        except json.JSONDecodeError:
+            raise ValueError(f"{mp}: corrupt manifest line {i + 1}") from None
+    return records
 
 
 def committed_partitions(path: str) -> set[str]:
@@ -105,11 +122,19 @@ def append_manifest(path: str, records: list[dict]) -> None:
     """Append committed-partition records (one JSON line each). The
     caller appends ONLY after its write action returned — the append
     is the commit point, so a kill mid-write leaves the manifest
-    without the row and the rerun redoes that partition."""
+    without the row and the rerun redoes that partition. A torn line
+    left by an earlier kill is cut off first, so the new records never
+    extend it into a corrupt middle line. The append is flushed and
+    fsync'ed before it returns."""
     os.makedirs(path, exist_ok=True)
-    with open(_manifest_path(path), "a") as f:
-        for rec in records:
-            f.write(json.dumps(rec) + "\n")
+    with open(_manifest_path(path), "ab+") as f:
+        f.seek(0)
+        data = f.read()
+        if data and not data.endswith(b"\n"):
+            f.truncate(data.rfind(b"\n") + 1)
+        f.write("".join(json.dumps(rec) + "\n" for rec in records).encode())
+        f.flush()
+        os.fsync(f.fileno())
 
 
 def write_partitioned(

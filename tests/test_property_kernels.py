@@ -1,13 +1,15 @@
 """Property tests (hypothesis) for the pure-numpy kernels.
 
 SURVEY.md §7.4: hand-rolled geometry/codec kernels are property-tested
-against brute-force scalar implementations. No SparkSession here —
-these run in milliseconds.
+against brute-force scalar implementations. They run in milliseconds;
+only the layer-order test also runs its points through Spark, to hold
+the JVM pip_join to the numpy kernel.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -16,6 +18,7 @@ from cdr_analysis_tools_hadoop_spark.functions import codec, geo
 from cdr_analysis_tools_hadoop_spark.operators.spatial_join import (
     PolygonIndex,
     assign_zone_np,
+    pip_join,
 )
 from cdr_analysis_tools_hadoop_spark.sources import synthetic
 
@@ -81,24 +84,56 @@ def _square(x0: float, y0: float, x1: float, y1: float) -> np.ndarray:
     return np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1]])
 
 
-@pytest.mark.parametrize("order", ["AB", "BA", "CA", "AC", "ACB"])
-def test_polygon_index_overlapping_layers_first_hit(order):
+def _hard_points(idx: PolygonIndex) -> tuple[np.ndarray, np.ndarray]:
+    """(lat, lon) of points where a ray cast is decided by rounding:
+    every polygon vertex, points along every edge, and the four corners
+    of every boundary cell (the corner formula PolygonIndex uses)."""
+    pts = []
+    for ring in idx.rings:
+        nxt = np.roll(ring, -1, axis=0)
+        pts += [ring + t * (nxt - ring) for t in (0.0, 0.25, 1 / 3, 0.5, 0.75)]
+    n = 1 << idx.res
+    rem = idx.bnd_cells - (np.int64(idx.res) << 54)
+    for dx in (0, 1):
+        for dy in (0, 1):
+            ix, iy = rem // n + dx, rem % n + dy
+            pts.append(np.stack([geo.LON0 + geo.DLON * ix / n, geo.LAT0 + geo.DLAT * iy / n], axis=1))
+    pts = np.concatenate(pts)
+    return pts[:, 1], pts[:, 0]
+
+
+@pytest.mark.parametrize("order", ["AB", "BA", "CA", "AC", "ACB", "towers25"])
+def test_polygon_index_overlapping_layers_first_hit(spark, order):
     """Overlapping polygons resolve by layer order: a cell inside a
     later polygon but crossed by an earlier one's edge must be refined,
     not answered by the interior lookup. Edges sit off the res-10 grid
-    lines; C lies inside A."""
+    lines; C lies inside A. The Spark pip_join must give the same
+    polygon as assign_zone_np, also on vertices, edges and cell
+    corners, for these layers and the 25-tower res-8 layer."""
     shapes = {
         "A": _square(139.2013, 35.2017, 139.6031, 35.6043),
         "B": _square(139.4007, 35.4011, 139.8029, 35.8037),
         "C": _square(139.3003, 35.3009, 139.4501, 35.4507),
     }
-    polys = [(k, shapes[k]) for k in order]
+    if order == "towers25":
+        towers = synthetic.towers_np(25)
+        polys = list(zip(towers[:, 0].astype(np.int64), synthetic.voronoi_polygons(towers)))
+        res = 8
+    else:
+        polys, res = [(k, shapes[k]) for k in order], 10
     rng = np.random.default_rng(3)
-    lat = geo.LAT0 + rng.random(20_000) * geo.DLAT
-    lon = geo.LON0 + rng.random(20_000) * geo.DLON
-    idx = PolygonIndex(polys, 10)
-    got = assign_zone_np(idx, geo.cell_id_np(lat, lon, 10), lat, lon)
+    idx = PolygonIndex(polys, res)
+    hard_lat, hard_lon = _hard_points(idx)
+    lat = np.concatenate([geo.LAT0 + rng.random(20_000) * geo.DLAT, hard_lat])
+    lon = np.concatenate([geo.LON0 + rng.random(20_000) * geo.DLON, hard_lon])
+    got = assign_zone_np(idx, geo.cell_id_np(lat, lon, res), lat, lon)
     assert (got == _first_hit(polys, lat, lon)).all()
+
+    pdf = pd.DataFrame({"pid": np.arange(len(lat)), "lat": lat, "lon": lon})
+    rows = pip_join(spark.createDataFrame(pdf), polys, res=res).select("pid", "poly_id").collect()
+    ids = [str(p) for p, _ in polys]
+    want = {pid: (ids[z] if z >= 0 else None) for pid, z in enumerate(got.tolist())}
+    assert {r.pid: r.poly_id for r in rows} == want
 
 
 @pytest.mark.parametrize("layer", ["empty", "sub_cell", "off_grid", "degenerate", "mixed"])

@@ -21,6 +21,39 @@ def cdr(spark, sf_dir):
 # checkpoint manifest
 
 
+def _records(*parts):
+    return [checkpoint.make_commit_record(p, 10, 1.0, "lin", "app") for p in parts]
+
+
+def test_manifest_torn_final_line_is_skipped_and_cut(tmp_path):
+    """A kill inside append_manifest leaves a torn last line: reading
+    skips it with a warning, and the next append cuts it off instead of
+    gluing onto it."""
+    out = str(tmp_path / "m")
+    checkpoint.append_manifest(out, _records("a", "b"))
+    mp = os.path.join(out, checkpoint.MANIFEST_NAME)
+    whole = json.dumps(_records("c")[0]) + "\n"
+    for torn in (whole[:17], whole[:-1]):  # cut mid-record; cut before "\n"
+        with open(mp, "a") as f:
+            f.write(torn)
+        with pytest.warns(UserWarning, match="torn final line"):
+            assert checkpoint.committed_partitions(out) == {"a", "b"}
+        checkpoint.append_manifest(out, _records("d"))
+        assert [m["partition"] for m in checkpoint.read_manifest(out)] == ["a", "b", "d"]
+        open(mp, "w").write("".join(json.dumps(r) + "\n" for r in _records("a", "b")))
+
+
+def test_manifest_corrupt_middle_line_raises(tmp_path):
+    out = str(tmp_path / "m")
+    checkpoint.append_manifest(out, _records("a"))
+    mp = os.path.join(out, checkpoint.MANIFEST_NAME)
+    with open(mp, "a") as f:
+        f.write('{"partition": "b", "sta\n')
+    checkpoint.append_manifest(out, _records("c"))
+    with pytest.raises(ValueError, match="corrupt manifest line 2"):
+        checkpoint.read_manifest(out)
+
+
 def test_checkpoint_write_then_resume_skips(cdr, tmp_path):
     out = str(tmp_path / "fact")
     df = cdr.withColumn("pdt", F.to_date("call_time").cast("string"))

@@ -114,6 +114,83 @@ def test_knn_within_radius_matches_bruteforce(spark, points):
             assert r["site_id"] is None
 
 
+def test_knn_planar_matches_bruteforce_exactly(spark, points):
+    """metric="planar" is arithmetic only, so the JVM lookup must equal
+    a numpy brute force bit for bit: same site, same distance."""
+    pois = synthetic.poi_np(300)
+    got = knn.nearest_site_within(points, pois, radius_m=300.0, metric="planar").collect()
+    lat = np.array([r["lat"] for r in got])
+    lon = np.array([r["lon"] for r in got])
+    d = np.sqrt(
+        geo.planar_d2_np(lat[:, None], lon[:, None], pois[None, :, 1], pois[None, :, 2])
+    ) * geo.M_PER_DEG
+    d = np.where(d <= 300.0, d, np.inf)
+    dm = d.min(axis=1)
+    close = d <= dm[:, None] * (1.0 + 1e-12)
+    ids = pois[:, 0].astype(np.int64)
+    hits = 0
+    for i, r in enumerate(got):
+        if np.isfinite(dm[i]):
+            j = np.flatnonzero(close[i])[np.argmin(ids[close[i]])]
+            assert (r["site_id"], r["site_dist_m"]) == (ids[j], d[i, j])
+            hits += 1
+        else:
+            assert (r["site_id"], r["site_dist_m"]) == (None, None)
+    assert hits > 0
+
+
+_BAD_ROWS = [
+    (1, 35.5, 139.5, "ok", 1.5),
+    (2, float("nan"), 139.5, "nan lat", float("nan")),
+    (3, 35.5, float("nan"), "nan lon", 2.5),
+    (4, None, 139.5, "null lat", None),
+    (5, 35.5, None, "null lon", 3.5),
+    (6, 80.0, 10.0, "outside", float("nan")),
+    (7, -80.0, -170.0, "outside", 4.0),
+    (8, 35.2, 139.2, "ok", float("nan")),
+]
+
+
+def _same(a, b) -> bool:
+    return a == b or (isinstance(a, float) and isinstance(b, float) and np.isnan(a) and np.isnan(b))
+
+
+@pytest.mark.parametrize("op", ["pip_join", "nearest_site_within"])
+def test_spatial_lookups_keep_columns_on_bad_coordinates(spark, op):
+    """NaN, NULL and outside-bbox coordinates (ANSI mode) leave every
+    input column as it was, NaN passthrough values included, and get a
+    null zone or site; the good rows still get one."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    df = spark.createDataFrame(_BAD_ROWS, "pid long, lat double, lon double, tag string, score double")
+    if op == "pip_join":
+        out = spatial_join.pip_join(df, pipeline.tower_polygons(), out_col="hit", res=8)
+    else:
+        sites = np.array([[11.0, 35.5, 139.5001], [12.0, 35.2, 139.2001]])
+        out = knn.nearest_site_within(df, sites, radius_m=300.0, id_out="hit")
+    rows = {r["pid"]: r for r in out.collect()}
+    assert len(rows) == len(_BAD_ROWS)
+    for row in _BAD_ROWS:
+        got = rows[row[0]]
+        assert all(_same(a, b) for a, b in zip(tuple(got)[: len(row)], row)), (row, got)
+        assert (got["hit"] is not None) == (row[3] == "ok"), (row, got)
+
+
+def test_spatial_lookups_run_in_the_jvm(spark, points):
+    """Both lookups plan without a Python evaluation node, and their
+    cell tables are constants in the optimized plan: no JSON is parsed
+    per row."""
+    for out in (
+        spatial_join.pip_join(points, pipeline.tower_polygons(), res=8),
+        knn.nearest_site_within(points, synthetic.poi_np(100), radius_m=300.0),
+    ):
+        qe = out._jdf.queryExecution()
+        plans = qe.optimizedPlan().toString() + qe.executedPlan().toString()
+        for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas", "PythonUDF"):
+            assert node not in plans
+        for per_row in ("from_json", "jsontostructs", "scalar-subquery", "subquery"):
+            assert per_row not in plans.lower()
+
+
 def test_assign_tiles_and_rollup(spark, points):
     tiled = tiling.assign_tiles(points, [10, 12])
     assert tiled.count() == points.count() * 2

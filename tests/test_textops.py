@@ -780,3 +780,26 @@ def test_ngram_perplexity_materialize_held_out(spark):
         ).collect()
     }
     assert got == base
+
+
+@pytest.mark.parametrize("name", ["token_length_quantiles", "corpus_report"])
+def test_oracle_outputs_are_bigint_not_hugeint(spark, sf_dir, name):
+    """DuckDB widens sum()/count() arithmetic to HUGEINT (and decimal
+    literals to DECIMAL) where Spark emits BIGINT; the oracle twins
+    must cast, or the gate's value hash compares `5` with `5.0`."""
+    import duckdb
+
+    import __spark_entry__
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf_dir}/documents.parquet')"
+    )
+    oracle = __spark_entry__.oracle_sql()[name]
+    types = {r[0]: r[1] for r in con.execute(f"DESCRIBE {oracle}").fetchall()}
+    wide = {c: t for c, t in types.items() if t == "HUGEINT" or t.startswith("DECIMAL")}
+    assert not wide, wide
+    got = __spark_entry__.queries()[name](spark, sf_dir)
+    for field in got.schema.fields:
+        if field.dataType.typeName() == "long":
+            assert types[field.name] == "BIGINT", (field.name, types[field.name])
