@@ -172,6 +172,81 @@ def decode_video(blob: bytes) -> tuple[np.ndarray, int]:
     return out.astype(np.uint8), fps
 
 
+# --- shared kernel helpers ---------------------------------------------------
+# The Arrow kernels (pipeline, operators/multimodal) all read a binary
+# column, group decoded images by shape and reduce each group as one
+# stacked numpy op; these are the one copy of those steps.
+
+_LUMA_W = np.array([0.299, 0.587, 0.114])
+
+
+def luma_weights(c: int) -> np.ndarray:
+    """Per-channel luma weights for a ``c``-channel image: BT.601 for
+    RGB, the plain channel mean otherwise (grayscale = the channel
+    itself; RGBA and exotic layouts = unweighted mean). The channel
+    count is a free u8 header field, so no kernel may assume c == 3."""
+    if c == 3:
+        return _LUMA_W
+    return np.full(c, 1.0 / c)
+
+
+def blob_views(rb, name: str = "bytes") -> list[memoryview]:
+    """Zero-copy memoryview slices of a RecordBatch binary column."""
+    barr = rb.column(rb.schema.get_field_index(name))
+    _, offbuf, databuf = barr.buffers()
+    # binary arrays carry int32 offsets; honor the slice offset
+    offs = np.frombuffer(offbuf, dtype=np.int32)[
+        barr.offset : barr.offset + len(barr) + 1
+    ]
+    data = memoryview(databuf)
+    return [data[offs[i] : offs[i + 1]] for i in range(len(barr))]
+
+
+def shape_groups(pix_list):
+    """Yield (indices, stack) per distinct image shape: one stacked
+    numpy op per (h, w, channels) instead of one per image. The
+    channel count is part of the key — same-sized gray and RGB images
+    must not land in one np.stack."""
+    groups: dict[tuple, list[int]] = {}
+    for i, p in enumerate(pix_list):
+        groups.setdefault(p.shape, []).append(i)
+    for idxs in groups.values():
+        yield np.asarray(idxs), np.stack([pix_list[i] for i in idxs])
+
+
+_ONES = np.uint64(0x0101010101010101)  # bit 0 of every byte
+
+
+def qnt4_sse(stack: np.ndarray) -> np.ndarray:
+    """Per-image sum of squared errors of the qnt4 round trip, for a
+    uint8 stack of shape (k, ...), as int64 of shape (k,).
+
+    qnt4 keeps the top 6 bits and decodes the low 2 bits as 2, so a
+    sample v has residual (v & 3) - 2 and squared error 4, 1, 0, 1 for
+    v & 3 = 0, 1, 2, 3: SSE = 4·#(v & 3 == 0) + #(v odd). Both counts
+    are taken bit-parallel (SWAR) over uint64 views, one indicator bit
+    per byte lane, so no per-sample temporary wider than the input is
+    made. Images whose byte count is not a multiple of 8 are padded
+    with 2, whose residual is 0."""
+    k = stack.shape[0]
+    n = int(np.prod(stack.shape[1:], dtype=np.int64))
+    flat = stack.reshape(k, n)
+    if n % 8 or not flat.flags.c_contiguous:
+        padded = np.full((k, -(-n // 8) * 8), 2, dtype=np.uint8)
+        padded[:, :n] = flat
+        flat = padded
+    x = flat.view(np.uint64)
+    z = x >> np.uint64(1)
+    z |= x
+    np.invert(z, out=z)
+    z &= _ONES  # lane bit set <=> v & 3 == 0
+    z <<= np.uint64(2)
+    z += x & _ONES  # lane = 4·[v & 3 == 0] + [v odd], at most 4
+    z *= _ONES  # top byte = sum of the 8 lanes, at most 32
+    z >>= np.uint64(56)
+    return z.sum(axis=1, dtype=np.int64)
+
+
 def psnr(a: np.ndarray, b: np.ndarray) -> float:
     a = a.astype(np.float64)
     b = b.astype(np.float64)
@@ -191,13 +266,7 @@ def phash_ahash(pixels: np.ndarray, grid: int = 8) -> int:
     reconstruct it (sources/synthetic.py:phash_sql) — this function is
     the real-data path and is unit-tested for determinism/stability.
     """
-    c = pixels.shape[2]
-    # BT.601 luma for RGB; channel mean for grayscale/RGBA/other
-    # layouts (the codec's channel count is a free header field)
-    w_c = (
-        np.array([0.299, 0.587, 0.114]) if c == 3 else np.full(c, 1.0 / c)
-    )
-    luma = pixels.astype(np.float64) @ w_c
+    luma = pixels.astype(np.float64) @ luma_weights(pixels.shape[2])
     h, w = luma.shape
     if h == 0 or w == 0:
         return 0  # empty image: deterministic zero hash
@@ -241,11 +310,7 @@ def dhash(pixels: np.ndarray, grid: int = 8) -> int:
     structure and luminance structure fail independently, so the
     wide fingerprint carries the key bits the 64-bit banding caps
     deny (r4 verdict item 2)."""
-    c = pixels.shape[2]
-    w_c = (
-        np.array([0.299, 0.587, 0.114]) if c == 3 else np.full(c, 1.0 / c)
-    )
-    luma = pixels.astype(np.float64) @ w_c
+    luma = pixels.astype(np.float64) @ luma_weights(pixels.shape[2])
     h, w = luma.shape
     if h == 0 or w == 0:
         return 0  # empty image: deterministic zero hash

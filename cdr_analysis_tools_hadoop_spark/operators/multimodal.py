@@ -32,48 +32,6 @@ from pyspark.sql.types import (
 from ..functions import codec
 
 
-def _blob_views(rb, name: str = "bytes"):
-    """Zero-copy memoryview slices of a RecordBatch binary column."""
-    barr = rb.column(rb.schema.get_field_index(name))
-    _, offbuf, databuf = barr.buffers()
-    # binary arrays carry int32 offsets; honor the slice offset
-    offs = np.frombuffer(offbuf, dtype=np.int32)[
-        barr.offset : barr.offset + len(barr) + 1
-    ]
-    data = memoryview(databuf)
-    return [data[offs[i] : offs[i + 1]] for i in range(len(barr))]
-
-
-def _shape_groups(pix_list):
-    """Indices of same-shaped images: one stacked numpy op per
-    distinct (h, w, channels) instead of per image. The channel count
-    is part of the key — same-sized gray and RGB images must not land
-    in one np.stack."""
-    groups: dict[tuple, list[int]] = {}
-    for i, p in enumerate(pix_list):
-        groups.setdefault(p.shape, []).append(i)
-    for idxs in groups.values():
-        yield np.asarray(idxs), np.stack([pix_list[i] for i in idxs])
-
-
-# PSNR of the qnt4 round-trip without re-encoding: quantizing the low
-# 2 bits to 2 leaves residual (v & 3) - 2, so SSE is a 4-entry LUT sum.
-_SQERR_LUT = np.array([4, 1, 0, 1], dtype=np.uint8)
-_LUMA_W = np.array([0.299, 0.587, 0.114])
-
-
-def _luma_weights(c: int) -> np.ndarray:
-    """Per-channel luma weights for a ``c``-channel image: BT.601 for
-    RGB, the plain channel mean otherwise (grayscale = the channel
-    itself; RGBA and exotic layouts = unweighted mean). The codec's
-    channel count is a free u8 header field, so the kernels must not
-    assume c == 3 — a bare ``csum @ _LUMA_W`` crashes the whole job
-    on the first grayscale blob."""
-    if c == 3:
-        return _LUMA_W
-    return np.full(c, 1.0 / c)
-
-
 def decode_features(images: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     """Decode every blob and emit per-image features:
     mean luma, pixel phash (average-hash), PSNR of a qnt4 re-encode
@@ -104,16 +62,16 @@ def decode_features(images: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
         import pyarrow as pa
 
         for rb in batches:
-            pix_list = [codec.decode(v) for v in _blob_views(rb)]
+            pix_list = [codec.decode(v) for v in codec.blob_views(rb)]
             n = len(pix_list)
             ml = np.empty(n)
             ps = np.empty(n)
             pph = np.empty(n, dtype=np.int64)
-            for idxs, stack in _shape_groups(pix_list):
+            for idxs, stack in codec.shape_groups(pix_list):
                 k, h, w, c = stack.shape
                 csum = stack.sum(axis=(1, 2), dtype=np.int64)
-                ml[idxs] = (csum @ _luma_weights(c)) / (h * w)
-                sse = _SQERR_LUT[stack & 3].sum(axis=(1, 2, 3), dtype=np.int64)
+                ml[idxs] = (csum @ codec.luma_weights(c)) / (h * w)
+                sse = codec.qnt4_sse(stack)
                 npix = float(h * w * c)
                 with np.errstate(divide="ignore"):
                     ps[idxs] = np.minimum(
@@ -164,7 +122,7 @@ def transcode(images: DataFrame, to_fmt: str = "qnt4") -> DataFrame:
         import pyarrow as pa
 
         for rb in batches:
-            blobs = [enc(codec.decode(v)) for v in _blob_views(rb)]
+            blobs = [enc(codec.decode(v)) for v in codec.blob_views(rb)]
             yield pa.RecordBatch.from_arrays(
                 [
                     rb.column(0),  # image_id passthrough, zero copy
@@ -209,7 +167,7 @@ def frame_sample(videos: DataFrame, every_n: int = 30) -> DataFrame:
             ws: list = []
             hs: list = []
             blobs: list = []
-            for vid, blob in zip(vids, _blob_views(rb)):
+            for vid, blob in zip(vids, codec.blob_views(rb)):
                 frames, _fps = codec.decode_video(blob)
                 n, h, w, _c = frames.shape
                 if n == 0:  # degenerate zero-frame clip: nothing to emit
@@ -261,7 +219,7 @@ def video_features(videos: DataFrame) -> DataFrame:
         import pyarrow as pa
 
         for rb in batches:
-            decoded = [codec.decode_video(v) for v in _blob_views(rb)]
+            decoded = [codec.decode_video(v) for v in codec.blob_views(rb)]
             k = len(decoded)
             nf = np.empty(k, dtype=np.int32)
             fpss = np.empty(k, dtype=np.int32)
@@ -281,7 +239,7 @@ def video_features(videos: DataFrame) -> DataFrame:
                     ml[i] = 0.0
                 else:
                     csum = frames.sum(axis=(0, 1, 2), dtype=np.int64)
-                    ml[i] = float(csum @ _luma_weights(c)) / (n * h * w)
+                    ml[i] = float(csum @ codec.luma_weights(c)) / (n * h * w)
                 if n > 1:
                     d = np.abs(
                         frames[1:].astype(np.int16) - frames[:-1]
@@ -340,7 +298,7 @@ def audio_features(audios: DataFrame) -> DataFrame:
         import pyarrow as pa
 
         for rb in batches:
-            decoded = [codec.decode_audio(v) for v in _blob_views(rb)]
+            decoded = [codec.decode_audio(v) for v in codec.blob_views(rb)]
             k = len(decoded)
             srs = np.empty(k, dtype=np.int32)
             ns = np.empty(k, dtype=np.int64)
@@ -411,7 +369,7 @@ def audio_resample(audios: DataFrame, to_sr: int = 8_000) -> DataFrame:
         import pyarrow as pa
 
         for rb in batches:
-            decoded = [codec.decode_audio(v) for v in _blob_views(rb)]
+            decoded = [codec.decode_audio(v) for v in codec.blob_views(rb)]
             ns: list = []
             blobs: list = []
             for pcm, sr in decoded:
@@ -468,12 +426,12 @@ def resize_box(images: DataFrame, factor: int = 2) -> DataFrame:
         import pyarrow as pa
 
         for rb in batches:
-            pix_list = [codec.decode(v) for v in _blob_views(rb)]
+            pix_list = [codec.decode(v) for v in codec.blob_views(rb)]
             n = len(pix_list)
             ws = np.empty(n, dtype=np.int32)
             hs = np.empty(n, dtype=np.int32)
             blobs: list = [None] * n
-            for idxs, stack in _shape_groups(pix_list):
+            for idxs, stack in codec.shape_groups(pix_list):
                 k, h, w, c = stack.shape
                 h2, w2 = (h // factor) * factor, (w // factor) * factor
                 small = (
@@ -554,7 +512,7 @@ def augment(
         for rb in batches:
             ids_out, ops_out, ws, hs, blobs = [], [], [], [], []
             id_col = rb.column(0)
-            for i, v in enumerate(_blob_views(rb)):
+            for i, v in enumerate(codec.blob_views(rb)):
                 pix = codec.decode(v)
                 iid = id_col[i].as_py()
                 for op in op_list:
@@ -691,7 +649,7 @@ def video_signature(videos: DataFrame, slots: int = 8) -> DataFrame:
 
         for rb in batches:
             sigs = []
-            for blob in _blob_views(rb):
+            for blob in codec.blob_views(rb):
                 frames, _fps = codec.decode_video(blob)
                 n = frames.shape[0]
                 if n == 0:
@@ -858,7 +816,7 @@ def audio_signature(audios: DataFrame) -> DataFrame:
 
         for rb in batches:
             fps = np.empty(len(rb), dtype=np.int64)
-            for i, blob in enumerate(_blob_views(rb)):
+            for i, blob in enumerate(codec.blob_views(rb)):
                 samples, sr = codec.decode_audio(blob)
                 fps[i] = _audio_fingerprint(samples, sr)
             yield pa.RecordBatch.from_arrays(

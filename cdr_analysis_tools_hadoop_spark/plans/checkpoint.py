@@ -27,9 +27,10 @@ Design (Iceberg-commit-style, file-based):
   intact and the manifest is appended only after the write action
   returns.
 - Lineage: the fingerprint is a hash of the input's file listing
-  (``df.inputFiles()``); a resume against CHANGED inputs is refused
-  unless ``allow_lineage_change=True`` — silently mixing old and new
-  source data is the failure mode this catches.
+  (``df.inputFiles()``) and of each local file's size and mtime; a
+  resume against CHANGED inputs (renamed, added, dropped or rewritten
+  in place) is refused unless ``allow_lineage_change=True`` — silently
+  mixing old and new source data is the failure mode this catches.
 """
 
 from __future__ import annotations
@@ -39,6 +40,7 @@ import json
 import os
 import time
 import warnings
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -82,7 +84,20 @@ def lineage_fingerprint(df: DataFrame) -> str:
     return files_fingerprint(sorted(df.inputFiles()))
 
 
+def _local_path(fpath: str) -> str | None:
+    """The filesystem path of a local path or ``file:`` URI (the forms
+    ``inputFiles()`` returns on a local filesystem); None otherwise."""
+    if fpath.startswith("file:"):
+        return unquote(urlparse(fpath).path)
+    if "://" in fpath:
+        return None
+    return fpath
+
+
 def files_fingerprint(files: list[str]) -> str:
+    """Hash of a file list and, for local files, each file's size and
+    mtime, so an input rewritten in place under the same name changes
+    the fingerprint as well as a renamed one."""
     # NUL-separated: hashing the bare concatenation would let two
     # DIFFERENT file lists collide whenever characters move across a
     # path boundary (['/a/bc', '/d'] vs ['/a/b', 'c/d']) — defeating
@@ -91,6 +106,10 @@ def files_fingerprint(files: list[str]) -> str:
     h.update(str(len(files)).encode())
     for fpath in files:
         h.update(b"\0" + fpath.encode())
+        local = _local_path(fpath)
+        if local is not None:
+            st = os.stat(local)
+            h.update(f"\0{st.st_size}\0{st.st_mtime_ns}".encode())
     return h.hexdigest()[:16]
 
 

@@ -79,10 +79,6 @@ def test_shape_groups_split_mixed_channel_batches():
     must land in separate stacks — np.stack would raise otherwise."""
     import numpy as np
 
-    from cdr_analysis_tools_hadoop_spark.operators.multimodal import (
-        _shape_groups,
-    )
-
     pix = [
         np.zeros((4, 4, 3), dtype=np.uint8),
         np.ones((4, 4), dtype=np.uint8),        # gray, 2-D
@@ -90,7 +86,7 @@ def test_shape_groups_split_mixed_channel_batches():
         np.full((4, 4, 3), 3, dtype=np.uint8),
         np.full((2, 4, 3), 4, dtype=np.uint8),
     ]
-    got = {tuple(idxs): stack.shape for idxs, stack in _shape_groups(pix)}
+    got = {tuple(idxs): stack.shape for idxs, stack in codec.shape_groups(pix)}
     assert got == {
         (0, 3): (2, 4, 4, 3),
         (1,): (1, 4, 4),
@@ -99,3 +95,47 @@ def test_shape_groups_split_mixed_channel_batches():
     }
     # every index appears exactly once
     assert sorted(i for k in got for i in k) == [0, 1, 2, 3, 4]
+
+
+def _sse_ref(stack):
+    """Sum over each image of ((v & 3) - 2)^2: the qnt4 round trip's
+    squared error, restated sample by sample."""
+    r = (stack.astype(np.int64) & 3) - 2
+    return (r * r).reshape(len(stack), -1).sum(axis=1)
+
+
+@pytest.mark.parametrize("c", [1, 2, 3, 4])
+def test_qnt4_sse_matches_per_sample_sum(c):
+    """The SWAR SSE equals the per-sample sum exactly. Nothing
+    downstream can tell a wrong SSE: the residual is at most 2, so
+    SSE <= 4N passes the 40 dB gate for every image."""
+    rng = np.random.default_rng(c)
+    # byte counts h*w*c with and without a multiple of 8
+    for h, w in [(1, 1), (3, 5), (7, 7), (8, 8), (16, 16), (13, 31), (64, 64)]:
+        stack = rng.integers(0, 256, (5, h, w, c), dtype=np.uint8)
+        got = codec.qnt4_sse(stack)
+        assert got.dtype == np.int64
+        assert got.tolist() == _sse_ref(stack).tolist()
+        assert (got <= 4 * h * w * c).all()
+        # a non-contiguous view takes the padded copy path
+        view = stack[:, ::2]
+        assert codec.qnt4_sse(view).tolist() == _sse_ref(view).tolist()
+
+
+@pytest.mark.parametrize("low", [0, 1, 2, 3])
+def test_qnt4_sse_each_residual_class(low):
+    """Every sample in one residual class: SSE = N * (low - 2)^2."""
+    rng = np.random.default_rng(low)
+    for shape in [(2, 1, 1, 1), (3, 5, 3, 3), (2, 16, 16, 3), (1, 9, 9, 4)]:
+        stack = (rng.integers(0, 64, shape, dtype=np.uint8) << 2) | low
+        n = int(np.prod(shape[1:]))
+        assert codec.qnt4_sse(stack).tolist() == [n * (low - 2) ** 2] * shape[0]
+        assert codec.qnt4_sse(stack).tolist() == _sse_ref(stack).tolist()
+
+
+def test_qnt4_sse_tiny_and_empty_images():
+    one = np.array([[[[0, 1, 2]]], [[[3, 255, 128]]]], dtype=np.uint8)
+    assert codec.qnt4_sse(one).tolist() == [5, 6]
+    for shape in [(2, 0, 0, 3), (1, 0, 5, 1), (3, 4, 0, 2)]:
+        empty = np.zeros(shape, dtype=np.uint8)
+        assert codec.qnt4_sse(empty).tolist() == [0] * shape[0]

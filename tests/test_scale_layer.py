@@ -177,6 +177,56 @@ def test_resumable_pipeline_kill_and_resume(spark, tmp_path):
         pipeline.run_pipeline_resumable(spark, img_path, out3, chunks=4)
 
 
+def test_resumable_pipeline_refuses_input_rewritten_in_place(spark, tmp_path):
+    """The lineage guard covers file contents, not only names: a
+    committed chunk's file rewritten under the same name with other
+    rows must stop the resume instead of summing stale partials."""
+    import pyarrow.parquet as pq
+
+    from cdr_analysis_tools_hadoop_spark import pipeline
+
+    img_path = str(tmp_path / "imgs")
+    synthetic.images_df(spark, 200, partitions=8).write.parquet(img_path)
+    out = str(tmp_path / "rollup")
+    pipeline.run_pipeline_resumable(spark, img_path, out, chunks=4, max_chunks=2)
+    assert checkpoint.committed_partitions(out) == {"chunk=0", "chunk=1"}
+
+    # file 0 of the sorted listing belongs to the committed chunk 0
+    first = sorted(
+        f for f in os.listdir(img_path) if f.endswith(".parquet")
+    )[0]
+    path = os.path.join(img_path, first)
+    table = pq.read_table(path)
+    pq.write_table(table.slice(0, table.num_rows // 2), path)
+    # the rewriting writer knows nothing of Hadoop's checksum sidecar
+    os.remove(os.path.join(img_path, f".{first}.crc"))
+
+    with pytest.raises(ValueError, match="different input files"):
+        pipeline.run_pipeline_resumable(spark, img_path, out, chunks=4)
+
+
+def test_arrow_batches_are_capped_by_bytes(spark):
+    """The engine conf caps Arrow batches to Python by bytes: 1 MB rows
+    arrive at most 16 to a batch, narrow rows still 10,000 to one."""
+
+    def batch_rows(batches):
+        import pyarrow as pa
+
+        for rb in batches:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([rb.num_rows], type=pa.int64())], names=["n"]
+            )
+
+    wide = spark.range(0, 100, 1, 1).select(
+        F.expr("cast(repeat('x', 1048576) as binary)").alias("blob")
+    )
+    got = [r.n for r in wide.mapInArrow(batch_rows, "n long").collect()]
+    assert sum(got) == 100 and max(got) <= 16
+    narrow = spark.range(0, 20000, 1, 1)
+    got = [r.n for r in narrow.mapInArrow(batch_rows, "n long").collect()]
+    assert got == [10000, 10000]
+
+
 # ---------------------------------------------------------------------------
 # salting
 

@@ -219,6 +219,31 @@ def test_multimodal_decode_features(spark):
     assert len({r["pixel_phash"] for r in feats}) > 1
 
 
+def test_decode_features_qnt4_psnr_matches_reencode(spark):
+    """qnt4_psnr is the PSNR of a real qnt4 re-encode: mixed shapes,
+    channel counts, a 1x1 image and pixels already on the qnt4 grid
+    (SSE 0, where codec.psnr is inf and the column holds its 1e9 cap)."""
+    from cdr_analysis_tools_hadoop_spark.functions import codec
+
+    rng = np.random.default_rng(3)
+    pix = [
+        rng.integers(0, 256, (h, w, c), dtype=np.uint8)
+        for h, w, c in [(16, 16, 3), (7, 5, 1), (1, 1, 3), (9, 3, 4), (4, 6, 2)]
+    ]
+    pix.append((rng.integers(0, 64, (8, 8, 3), dtype=np.uint8) << 2) | 2)
+    images = spark.createDataFrame(
+        [(str(i), i, codec.encode_rawz(p)) for i, p in enumerate(pix)],
+        "image_id string, phash long, bytes binary",
+    )
+    got = {r.image_id: r.qnt4_psnr for r in multimodal.decode_features(images).collect()}
+    for i, p in enumerate(pix):
+        want = codec.psnr(p, codec.decode(codec.encode_qnt4(p)))
+        if want == float("inf"):
+            assert got[str(i)] == 1e9
+        else:
+            assert got[str(i)] == pytest.approx(want, rel=1e-12)
+
+
 def test_multimodal_transcode(spark):
     images = synthetic.images_df(spark, 20, partitions=2)
     out = multimodal.transcode(images, "qnt4").collect()

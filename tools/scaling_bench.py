@@ -217,7 +217,7 @@ faithful stand-in for N vs 4N executors.
 
 Spark conf (all levels, session.py): AQE on, shuffle.partitions =
 2 x cores, Arrow UDFs only (mapInArrow + scalar pandas UDF; zero
-per-row Python), maxPartitionBytes=16m, broadcast joins for all
+per-row Python), Arrow batches capped at 16 MB, broadcast joins for all
 dimension tables.
 
 Headline analytics at sf={headline['sf']} on 32 cores (seconds):
