@@ -66,7 +66,7 @@ def _cpu_jiffies() -> list[int]:
 
 
 #: steal/(steal+busy) per timed run above which the run is DIRTY —
-#: same clean-window rule as tools/scaling_bench.py / sf1_bench.py
+#: same clean-window rule as tools/scaling_bench.py
 STEAL_MAX_PCT = 2.5
 
 

@@ -28,7 +28,6 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -37,7 +36,6 @@ from pyspark.sql.types import (
 
 from .functions import codec, geo
 from .operators import spatial_join
-from .sources import synthetic
 
 # PSNR >= 40 dB  <=>  MSE <= 255^2 * 1e-4  <=>  SSE <= gate*N. The qnt4
 # residual is at most 2 per sample, so SSE <= 4*N < gate*N: every
@@ -129,6 +127,10 @@ def with_anchor(decoded: DataFrame) -> DataFrame:
 
 def tower_polygons() -> list[tuple[int, np.ndarray]]:
     """The 25-tower Voronoi zone layer the image pipeline joins against."""
+    # imported here, not at module level: ``synthetic`` imports pandas,
+    # and every Python worker imports this module to run the kernel
+    from .sources import synthetic
+
     towers = synthetic.towers_np(25)
     return list(
         zip(towers[:, 0].astype(np.int64), synthetic.voronoi_polygons(towers))

@@ -14,12 +14,13 @@ Design (Iceberg-commit-style, file-based):
   (``<path>/_manifest.jsonl``); one record per committed partition:
   partition value, row count, wall seconds, rows/sec, input lineage
   fingerprint, Spark application id.
-- ``write_partitioned`` diffs requested partitions against committed
-  ones and writes ONLY the missing set — as one dynamic-overwrite job
-  (not a job per partition), so a resume of a 5000-partition run with
-  4990 committed does one scan filtered to 10 partitions. Partition
-  pruning pushes the IN-filter to the reader when the input is
-  already partitioned on the key.
+- ``write_partitioned`` filters out the committed partitions and writes
+  the rest — as one dynamic-overwrite job over one run of the input
+  plan (not a job per partition, and no separate pass to list the
+  input's partitions), so a resume of a 5000-partition run with 4990
+  committed does one scan filtered to 10 partitions. Partition pruning
+  pushes the NOT-IN filter to the reader when the input is already
+  partitioned on the key.
 - Dynamic partition overwrite (spark.sql.sources.partitionOverwriteMode
   = dynamic, set in session.py) makes the per-partition write atomic
   at the directory level: a partition directory is replaced only when
@@ -42,7 +43,7 @@ import time
 import warnings
 from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 MANIFEST_NAME = "_manifest.jsonl"
@@ -156,6 +157,20 @@ def append_manifest(path: str, records: list[dict]) -> None:
         os.fsync(f.fileno())
 
 
+#: Spark's directory name for a NULL partition value; NULL partitions
+#: commit under it, so they are resumable like any other partition
+NULL_PART = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _pending(part: Column, done: set[str]) -> Column:
+    """Rows whose partition value is not committed in ``done``. A bare
+    ``~isin()`` is NULL on a NULL partition value, which would drop those
+    rows whether or not they were committed."""
+    vals = sorted(done - {NULL_PART})
+    cond = ~part.isin(vals) if vals else part.isNotNull()
+    return cond if NULL_PART in done else cond | part.isNull()
+
+
 def write_partitioned(
     df: DataFrame,
     path: str,
@@ -164,8 +179,13 @@ def write_partitioned(
 ) -> dict:
     """Resumable partitioned parquet write.
 
-    Returns a summary dict: partitions written/skipped, rows, seconds.
-    Call again after a failure — committed partitions are skipped.
+    Returns a summary dict: ``written`` (partitions this call
+    committed, listed in ``partitions``), ``skipped`` (partitions
+    already committed, not rewritten), ``rows`` and ``seconds`` of the
+    write. Call again after a failure — committed partitions are
+    skipped. The input plan runs once: the rows of every uncommitted
+    partition are written in one job, and what that job wrote is read
+    back from the committed output.
     """
     lineage = lineage_fingerprint(df)
     manifest = read_manifest(path)
@@ -178,36 +198,13 @@ def write_partitioned(
                 "pass allow_lineage_change=True to mix, or clear the manifest"
             )
 
-    # NULL partition values commit under Spark's own directory name
-    # for them, so they are resumable like any other partition (a bare
-    # isin() would silently drop NULL rows, and sorted() over a set
-    # containing None raises TypeError)
-    NULL_PART = "__HIVE_DEFAULT_PARTITION__"
-    part_str = F.col(partition_col).cast("string")
-    all_parts = {
-        NULL_PART if r["p"] is None else r["p"]
-        for r in df.select(part_str.alias("p")).distinct().collect()
-    }
-    todo = sorted(all_parts - done)
-    summary = {
-        "written": 0,
-        "skipped": len(all_parts) - len(todo),
-        "rows": 0,
-        "seconds": 0.0,
-        "partitions": todo,
-    }
-    if not todo:
-        return summary
-
-    cond = part_str.isin([p for p in todo if p != NULL_PART])
-    if NULL_PART in todo:
-        cond = cond | part_str.isNull()
-    subset = df.filter(cond)
+    subset = df.filter(_pending(F.col(partition_col).cast("string"), done))
     spark = df.sparkSession
     # dynamic overwrite is the whole safety story: under the STATIC
     # default a resume would delete every committed partition (and
     # the manifest) before writing just the todo subset — force it
-    # here instead of silently depending on session.py's conf
+    # here instead of silently depending on session.py's conf. An
+    # empty subset writes no partition directory, so it replaces none.
     conf_key = "spark.sql.sources.partitionOverwriteMode"
     prior_mode = spark.conf.get(conf_key, "static")
     spark.conf.set(conf_key, "dynamic")
@@ -218,32 +215,42 @@ def write_partitioned(
     finally:
         spark.conf.set(conf_key, prior_mode)
 
-    # per-partition metrics from the COMMITTED output, not a second
-    # execution of the upstream plan: the written parquet is the tiny
-    # (or at worst same-size) result, and partition pruning reads only
-    # the todo directories
-    out = spark.read.parquet(path)
+    # written partitions and their row counts from the COMMITTED
+    # output, not a second execution of the upstream plan: the written
+    # parquet is the tiny (or at worst same-size) result, and partition
+    # pruning skips the committed directories. The input's schema reads
+    # an empty output too, and gives partition values their written
+    # type rather than an inferred one ("007" would read back as 7).
     out_part = F.col(partition_col).cast("string")
-    ocond = out_part.isin([p for p in todo if p != NULL_PART])
-    if NULL_PART in todo:
-        ocond = ocond | out_part.isNull()
     counts = {
         (NULL_PART if r["p"] is None else r["p"]): r["n"]
-        for r in out.filter(ocond)
+        for r in spark.read.schema(df.schema)
+        .parquet(path)
+        .filter(_pending(out_part, done))
         .groupBy(out_part.alias("p"))
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }
-    app_id = spark.sparkContext.applicationId
+    todo = sorted(counts)
     total_rows = sum(counts.values())
-    records = []
-    for p in todo:
-        rows = counts.get(p, 0)
-        share = elapsed * (rows / total_rows) if total_rows else 0.0
-        records.append(make_commit_record(p, rows, share, lineage, app_id))
-    append_manifest(path, records)
-    summary.update(written=len(todo), rows=total_rows, seconds=round(elapsed, 3))
-    return summary
+    if todo:
+        app_id = spark.sparkContext.applicationId
+        append_manifest(
+            path,
+            [
+                make_commit_record(
+                    p, counts[p], elapsed * counts[p] / total_rows, lineage, app_id
+                )
+                for p in todo
+            ],
+        )
+    return {
+        "written": len(todo),
+        "skipped": len(done),
+        "rows": total_rows,
+        "seconds": round(elapsed, 3) if todo else 0.0,
+        "partitions": todo,
+    }
 
 
 class CheckpointChain:

@@ -99,6 +99,70 @@ def test_checkpoint_lineage_guard(cdr, tmp_path):
     assert s["written"] == 1 and s["partitions"] == [victim]
 
 
+def test_checkpoint_write_runs_input_once(spark, tmp_path):
+    """Each call runs the input plan once: the uncommitted partitions
+    are written from one filtered pass and read back from the output,
+    with no separate pass to list the input's partitions. NULL
+    partition values commit and resume like any other."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def counted(batches):
+        for b in batches:
+            acc.add(b.num_rows)
+            yield b
+
+    base = spark.range(0, 600, numPartitions=3).select(
+        "id",
+        F.when(F.col("id") % 7 == 0, F.lit(None))
+        .otherwise(F.col("id") % 5)
+        .alias("p"),
+    )
+    df = base.mapInArrow(counted, base.schema)
+    out = str(tmp_path / "once")
+    null_part = "__HIVE_DEFAULT_PARTITION__"
+
+    s1 = checkpoint.write_partitioned(df, out, "p")
+    assert acc.value == 600
+    assert s1["written"] == 6 and s1["skipped"] == 0 and s1["rows"] == 600
+    assert s1["partitions"] == sorted(["0", "1", "2", "3", "4", null_part])
+
+    # drop the NULL partition's and one other record: only they rerun
+    mp = os.path.join(out, checkpoint.MANIFEST_NAME)
+    lines = open(mp).read().strip().split("\n")
+    keep = [ln for ln in lines if json.loads(ln)["partition"] not in ("3", null_part)]
+    open(mp, "w").write("\n".join(keep) + "\n")
+    acc.value = 0
+    s2 = checkpoint.write_partitioned(df, out, "p")
+    assert acc.value == 600
+    assert s2["partitions"] == ["3", null_part] and s2["skipped"] == 4
+    assert s2["rows"] == 600 // 7 + 1 + sum(1 for i in range(600) if i % 7 and i % 5 == 3)
+
+    acc.value = 0
+    s3 = checkpoint.write_partitioned(df, out, "p")
+    assert acc.value == 600
+    assert (s3["written"], s3["skipped"], s3["rows"]) == (0, 6, 0)
+    assert len(checkpoint.read_manifest(out)) == 6
+    assert spark.read.parquet(out).count() == 600
+
+
+def test_checkpoint_partition_values_keep_their_type(spark, tmp_path):
+    """Written partitions are read back with the input's types, so a
+    string value that looks like a number ("007") keeps its name, and
+    an empty input commits nothing without failing the read-back."""
+    df = spark.createDataFrame(
+        [("007", 1), ("007", 2), ("010", 3)], "p string, v int"
+    )
+    out = str(tmp_path / "typed")
+    s = checkpoint.write_partitioned(df, out, "p")
+    assert s["partitions"] == ["007", "010"] and s["rows"] == 3
+    rows = {m["partition"]: m["rows"] for m in checkpoint.read_manifest(out)}
+    assert rows == {"007": 2, "010": 1}
+
+    empty = spark.createDataFrame([], "p string, v int")
+    s = checkpoint.write_partitioned(empty, str(tmp_path / "empty"), "p")
+    assert (s["written"], s["skipped"], s["rows"]) == (0, 0, 0)
+
+
 def test_resumable_pipeline_kill_and_resume(spark, tmp_path):
     """North-rule resume clause, input side: a run killed between
     chunk commits resumes without recomputing completed chunks, and
