@@ -168,7 +168,7 @@ def poi_reallocation(stays: DataFrame, pois: DataFrame) -> DataFrame:
     IS "ORDER BY d2, poi_id LIMIT 1". Single pass, zero joins — the
     previous cross-join + window + join-back shape re-derived the
     stays lineage twice. For POI sets too large to inline, use
-    knn.cell_ring_knn (the scale path).
+    knn.nearest_site_within (the scale path).
     """
     radius2 = REALLOC_RADIUS_M * _DEG_PER_M
     radius2 = radius2 * radius2
@@ -838,8 +838,6 @@ def trajectory_simplify(
     trajectory_collect already carries); a multi-year unbounded trace
     would be windowed by day first, as trip_segments does.
     """
-    import pandas as pd
-
     if eps_m < 0:
         raise ValueError(f"eps_m must be >= 0, got {eps_m}")
 
@@ -847,7 +845,9 @@ def trajectory_simplify(
         f"{uid_col} long, seq int, ts timestamp, lat double, lon double"
     )
 
-    def simplify(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    # no type hints: grouped map is applyInPandas' default eval type,
+    # and hints on only some arguments make Spark warn on every call
+    def simplify(key, pdf):
         pdf = pdf.sort_values(
             [ts_col, lat_col, lon_col], kind="mergesort"
         ).reset_index(drop=True)
@@ -855,7 +855,7 @@ def trajectory_simplify(
             pdf[lat_col].to_numpy(), pdf[lon_col].to_numpy(), eps_m
         )
         out = pdf.loc[mask, [uid_col, ts_col, lat_col, lon_col]].copy()
-        out.insert(1, "seq", [int(i) for i in out.index])
+        out.insert(1, "seq", out.index.to_numpy(dtype="int32"))
         return out.rename(
             columns={ts_col: "ts", lat_col: "lat", lon_col: "lon"}
         )

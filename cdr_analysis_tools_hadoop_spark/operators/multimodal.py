@@ -15,7 +15,7 @@ binary column is read by slicing the Arrow data buffer through its
 offsets (one memoryview per batch, no per-row Python ``bytes``
 copies, no pandas block consolidation) and passthrough columns reuse
 the incoming Arrow buffers unchanged. This is the same pattern as the
-fused benchmark kernel (pipeline.py decode_validate), applied to the
+fused benchmark kernel (pipeline.run_pipeline), applied to the
 secondary multimodal paths.
 """
 
@@ -43,7 +43,7 @@ def decode_features(images: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     features AND the payload columns from ONE scan + ONE Python pass
     instead of a corpus×corpus rejoin.
 
-    This is the decode-validate stage of the benchmark pipeline."""
+    Its PSNR gate is the benchmark rollup's (codec.qnt4_sse)."""
     out_schema = StructType(
         [
             StructField("image_id", images.schema["image_id"].dataType),

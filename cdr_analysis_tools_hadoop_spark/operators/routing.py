@@ -197,7 +197,7 @@ def load_osm_extract(path: str) -> RoadGraph:
 
 def snap_node_sql(lat_col: str, lon_col: str, grid: int = GRID) -> str:
     """Nearest grid-node id, closed-form JVM arithmetic (for arbitrary
-    road networks use knn.cell_ring_knn — this synthetic graph is a
+    road networks use knn.nearest_site_within — this synthetic graph is a
     grid, so snapping needs no search)."""
     g1 = grid - 1
     i = (

@@ -119,19 +119,6 @@ def pyramid_rollup(
     return out
 
 
-def vector_to_tiles(
-    polys_df: DataFrame, zoom: int, lat_col: str = "clat", lon_col: str = "clon"
-) -> DataFrame:
-    """Vector->raster direction: assign polygon centroids (or any
-    vector feature points) to tiles at `zoom`."""
-    return polys_df.select(
-        "*",
-        F.expr(geo.tile_x_sql(lon_col, zoom)).alias("x"),
-        F.expr(geo.tile_y_sql(lat_col, zoom)).alias("y"),
-        F.lit(zoom).alias("z"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Exact HMesh parity (bytecode-recovered)
 

@@ -10,15 +10,16 @@ Reference parity:
 - J3: zone population (reference queries/statistics/
   zone_population.sql:1-4) — join + two-level aggregate.
 - J7: FindPolygon (registered, jar missing in the reference) — the
-  broadcast PIP path lives in operators/spatial_join.py and must agree
-  with the nearest-site result (tested both ways).
+  PIP path lives in operators/spatial_join.py and must agree with the
+  nearest-site result (tested both ways).
 
 Scale strategy: the tower layer is a DIMENSION (10^2..10^5 rows vs
 10^12 fact rows). For <= ~1e3 sites the argmin is compiled into a
 whole-stage-codegen JVM expression (array_min over an array of
 (d2, zone) structs) — zero shuffle, zero Python, embarrassingly
 parallel over fact partitions. For larger site sets use
-operators/knn.py (cell-ring expansion over a broadcast cell index).
+knn.nearest_site_within (a cell index compiled into the plan as
+constant tables).
 """
 
 from __future__ import annotations
@@ -75,7 +76,7 @@ def assign_zone(
     if len(sites) > 2000:
         raise ValueError(
             "expression-based nearest-site is for small dimension layers; "
-            "use operators.knn.cell_ring_knn for large site sets"
+            "use operators.knn.nearest_site_within for large site sets"
         )
     nearest = nearest_site_struct(lat_col, lon_col, sites)
     return df.withColumn(out_col, nearest.getField("zone_id"))

@@ -1,12 +1,12 @@
-"""Flagship benchmark pipeline (BASELINE.md protocol):
+"""Flagship benchmark pipeline (BASELINE.md protocol), one fused
+``mapInArrow`` kernel per batch:
 
-  images -> decode-validate (Arrow kernel) -> phash->anchor (JVM expr)
-         -> H3-style cell encode (JVM expr)
-         -> map-side PIP join vs tower-Voronoi polygons
-            (cell cover + ray-cast refine, operators/spatial_join.py;
-            the index rides in the kernel closure)
-         -> tile-pyramid assignment (JVM expr)
-         -> zone/tile aggregates
+  images -> decode + PSNR gate -> phash->anchor -> cell encode
+         -> PIP zone vs tower-Voronoi polygons (PolygonIndex,
+            operators/spatial_join.py; the index rides in the kernel
+            closure)
+         -> z14 tile assignment
+  then one codegen'd zone/tile aggregate.
 
 Measured metric: images/sec end-to-end. The decode stage reads every
 pixel and reports the PSNR gate of a qnt4 re-encode (PSNR >= 40 dB,
@@ -30,9 +30,7 @@ import os
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BooleanType, DoubleType, LongType, StringType, StructField, StructType,
-)
+from pyspark.sql.types import LongType, StructField, StructType
 
 from .functions import codec, geo
 from .operators import spatial_join
@@ -43,86 +41,16 @@ from .operators import spatial_join
 _MSE_GATE = 255.0**2 * 1e-4
 
 
-def _decode_and_gate(rb, want_luma: bool):
-    """The ONE decode + PSNR-gate block both Arrow kernels share:
-    zero-copy slicing of the ``bytes`` column, codec decode, the qnt4
-    SSE gate per shape stack, optional mean luma. Returns
-    (ok_bool, mean_luma_or_None)."""
+def _decode_and_gate(rb):
+    """Decode every blob of the batch's ``bytes`` column (zero-copy
+    slicing of the Arrow buffer) and apply the qnt4 PSNR gate per shape
+    stack; returns the bool ``ok`` array."""
     pix_list = [codec.decode(v) for v in codec.blob_views(rb)]
-    n = len(pix_list)
-    ok = np.empty(n, dtype=bool)
-    ml = np.empty(n) if want_luma else None
+    ok = np.empty(len(pix_list), dtype=bool)
     for idxs, stack in codec.shape_groups(pix_list):
-        k, h, w, c = stack.shape
-        if want_luma:
-            csum = stack.sum(axis=(1, 2), dtype=np.int64)
-            ml[idxs] = (csum @ codec.luma_weights(c)) / (h * w)
+        _, h, w, c = stack.shape
         ok[idxs] = codec.qnt4_sse(stack) <= _MSE_GATE * (h * w * c)
-    return ok, ml
-
-
-def decode_validate(images: DataFrame) -> DataFrame:
-    """Decode every blob, check the PSNR gate, keep (image_id, phash,
-    caption_len, mean_luma, psnr_ok).
-
-    Performance-critical design (this is the 100 TB hot path):
-
-    - ``mapInArrow``, not ``mapInPandas``: the binary column is read
-      by zero-copy slicing of the Arrow data buffer (offsets + one
-      memoryview) — no per-row Python ``bytes`` objects, no pandas
-      block consolidation, which removed most of the kernel (sy)
-      time the pandas path spent allocating and copying per-row
-      objects.
-    - caption never crosses into Python: ``length(caption)`` is
-      computed JVM-side before the UDF, so Arrow ships only
-      (image_id, phash, caption_len, bytes) in and 3 small arrays
-      out; image_id/phash/caption_len pass through as the SAME Arrow
-      buffers (zero copy in and out).
-    - integer-only reductions: mean luma from per-channel uint8 sums;
-      PSNR gate from the qnt4 round-trip SSE (codec.qnt4_sse: bit
-      counts over uint64 views), so no float expansion of pixel
-      data. ``psnr_ok`` is True for every decodable image: SSE <= 4*N
-      bounds the PSNR at >= 42.1 dB.
-    """
-    out_schema = StructType(
-        [
-            StructField("image_id", StringType()),
-            StructField("phash", LongType()),
-            StructField("caption_len", LongType()),
-            StructField("mean_luma", DoubleType()),
-            StructField("psnr_ok", BooleanType()),
-        ]
-    )
-    narrow = images.select(
-        "image_id", "phash", F.length("caption").cast("long").alias("caption_len"), "bytes"
-    )
-
-    def kernel(batches):
-        import pyarrow as pa
-
-        for rb in batches:
-            ok, ml = _decode_and_gate(rb, want_luma=True)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column(0),  # image_id: same Arrow buffer, zero copy
-                    rb.column(1),  # phash
-                    rb.column(2),  # caption_len
-                    pa.array(ml, type=pa.float64()),
-                    pa.array(ok, type=pa.bool_()),
-                ],
-                names=["image_id", "phash", "caption_len", "mean_luma", "psnr_ok"],
-            )
-
-    return narrow.mapInArrow(kernel, schema=out_schema)
-
-
-def with_anchor(decoded: DataFrame) -> DataFrame:
-    """phash -> anchor point, JVM-side expressions."""
-    return decoded.select(
-        "*",
-        F.expr(geo.anchor_lat_sql("phash")).alias("lat"),
-        F.expr(geo.anchor_lon_sql("phash")).alias("lon"),
-    )
+    return ok
 
 
 def tower_polygons() -> list[tuple[int, np.ndarray]]:
@@ -154,31 +82,35 @@ def run_pipeline(
 ) -> DataFrame:
     """Full pipeline; returns the per-(zone, tile) aggregate frame.
 
-    FUSED hot path: decode-validate, phash->anchor, cell encode, PIP
-    zone assignment and tile assignment all run inside ONE mapInArrow
-    kernel, emitting only 5 small int columns per row; Spark finishes
-    with a codegen'd two-phase hash aggregate (map-side partial +
-    one tiny shuffle). Rationale, measured at 480k images when the
-    staged plan still ran PIP in Python (mapInArrow decode -> JVM
-    anchor -> ArrowEvalPython PIP): TWO python worker pools and two
-    Arrow round trips, whose framework cost was ~2x the actual numpy
-    kernel cost. One python stage halves that and makes
-    the job scan -> map -> 17 MB shuffle -> 3k rows, which is also
-    exactly the shape that scales to 10^12 rows on a real cluster
-    (map-only until a trivially small aggregate).
+    FUSED hot path: decode, PSNR gate, phash->anchor, cell encode,
+    PIP zone assignment and tile assignment all run inside ONE
+    mapInArrow kernel, emitting only 5 small int columns per row; Spark
+    finishes with a codegen'd two-phase hash aggregate (map-side
+    partial + one tiny shuffle). Why fused, measured at 480k images
+    when PIP still ran in a second Python stage (mapInArrow decode ->
+    JVM anchor -> ArrowEvalPython PIP): TWO python worker pools and
+    two Arrow round trips, whose framework cost was ~2x the actual
+    numpy kernel cost. One python stage halves that and makes the job
+    scan -> map -> 17 MB shuffle -> 3k rows, which is also exactly the
+    shape that scales to 10^12 rows on a real cluster (map-only until
+    a trivially small aggregate). Composing the JVM operators instead
+    (pip_join plus the geo tile SQL, Python only decoding and gating)
+    gives the same rows but is slower: per-call plan analysis and the
+    JVM expressions cost more than the numpy work they replace.
 
     ``n_psnr_ok`` counts images passing the PSNR >= 40 dB gate, which
     every decodable image does (SSE <= 4*N, i.e. PSNR >= 42.1 dB); it
     equals ``n_images`` unless the gate code itself is wrong.
 
-    The composable operators (decode_validate, pip_join) remain the
-    building blocks for ad-hoc queries; this fusion is the benchmark/
-    production path for the full-table rollup. Both paths share the
-    same kernels (codec.decode, PolygonIndex, *_np geo math; pip_join
-    evaluates the PolygonIndex as JVM expressions, bit-identical to
-    assign_zone_np), and tests assert fused == staged. The PolygonIndex
+    The kernel shares its math with the ad-hoc operators
+    (codec.decode, PolygonIndex/assign_zone_np, the *_np geo
+    functions); tests check the rollup against a brute-force
+    reference (nearest tower, DuckDB anchors and tiles) that uses
+    neither PolygonIndex nor this kernel. The PolygonIndex
     rides in the kernel closure, so Spark ships it in the task binary
-    and frees it with the job.
+    and frees it with the job. ``images`` may be a stream: the plan is
+    streaming-legal (a stateless kernel plus one aggregate whose key
+    space is bounded by zones x tiles).
     """
     index = spatial_join.PolygonIndex(tower_polygons(), pip_res)
 
@@ -199,12 +131,7 @@ def run_pipeline(
         import pyarrow as pa
 
         for rb in batches:
-            # only the PSNR gate feeds the rollup — mean_luma is
-            # column-pruned (want_luma=False) exactly as Catalyst
-            # would prune it in the staged plan (decode_validate
-            # still computes it for consumers that select it)
-            ok_b, _ml = _decode_and_gate(rb, want_luma=False)
-            ok = ok_b.astype(np.int64)
+            ok = _decode_and_gate(rb).astype(np.int64)
             phash = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
             lat = geo.anchor_lat_np(phash)
             lon = geo.anchor_lon_np(phash)
@@ -422,28 +349,3 @@ def resumable_result(spark: SparkSession, out_path: str) -> DataFrame:
         )
     )
 
-
-def run_pipeline_staged(
-    spark: SparkSession,
-    images: DataFrame,
-    base_zoom: int = 14,
-    pip_res: int = 8,
-) -> DataFrame:
-    """Composed-operator variant of run_pipeline (same result); used
-    by tests to assert the fused kernel matches the operator chain."""
-    anchored = with_anchor(decode_validate(images))
-    zoned = spatial_join.pip_join(
-        anchored, tower_polygons(), lat_col="lat", lon_col="lon", out_col="zone_id", res=pip_res
-    )
-    tiled = zoned.select(
-        "zone_id",
-        "psnr_ok",
-        "caption_len",
-        F.expr(geo.tile_x_sql("lon", base_zoom)).alias("x"),
-        F.expr(geo.tile_y_sql("lat", base_zoom)).alias("y"),
-    )
-    return tiled.groupBy("zone_id", "x", "y").agg(
-        F.count(F.lit(1)).alias("n_images"),
-        F.sum(F.col("psnr_ok").cast("long")).alias("n_psnr_ok"),
-        F.sum("caption_len").alias("caption_bytes"),
-    )

@@ -93,17 +93,3 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
-    """Load the standard parquet tables from a scale-factor directory.
-
-    Returns a dict name -> DataFrame. Scans are lazy; Catalyst prunes
-    columns/predicates down to the parquet reader per query.
-    """
-    if names is None:
-        names = (
-            "region", "nation", "customer", "supplier", "part",
-            "orders", "lineitem", "events", "documents", "embeddings",
-        )
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}

@@ -130,23 +130,6 @@ def voronoi_polygons(sites: np.ndarray) -> list[np.ndarray]:
     return polys
 
 
-def admin_rect_polygons(nx: int = 2, ny: int = 3) -> list[tuple[str, np.ndarray]]:
-    """Rectangular admin boundary layer (nx*ny named rectangles)."""
-    out = []
-    for ix in range(nx):
-        for iy in range(ny):
-            lon_a = geo.LON0 + geo.DLON * ix / nx
-            lon_b = geo.LON0 + geo.DLON * (ix + 1) / nx
-            lat_a = geo.LAT0 + geo.DLAT * iy / ny
-            lat_b = geo.LAT0 + geo.DLAT * (iy + 1) / ny
-            ring = np.array(
-                [[lon_a, lat_a], [lon_b, lat_a], [lon_b, lat_b], [lon_a, lat_b]],
-                dtype=np.float64,
-            )
-            out.append((f"ADM_{ix}_{iy}", ring))
-    return out
-
-
 def poi_np(num: int = 100) -> np.ndarray:
     """(num, 3) of (poi_id, lat, lon) — deterministic POI sideload
     (reference: `add file {poi}` TSV consumed by

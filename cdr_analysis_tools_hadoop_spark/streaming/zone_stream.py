@@ -13,6 +13,10 @@ state (|zones| x windows-in-watermark); the watermark bounds state
 size, and `maxFilesPerTrigger` paces ingestion on a backlog. Use
 ``trigger(availableNow=True)`` for catch-up-then-stop batch-ish runs
 (that is also what the tests do).
+
+The image rollup needs no streaming twin: ``pipeline.run_pipeline``
+takes a ``read_parquet_stream`` frame as it is (its fused kernel is
+stateless and its one aggregate has a bounded key space).
 """
 
 from __future__ import annotations
@@ -23,15 +27,15 @@ from pyspark.sql import functions as F
 from ..operators import zones
 
 
-def read_events_stream(
+def read_parquet_stream(
     spark: SparkSession,
     input_dir: str,
     schema_from: str,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """File-source stream over a directory of events parquet files.
-    ``schema_from``: a static parquet path used only to fix the schema
-    (streaming sources require one up front)."""
+    """File-source stream over a directory of parquet files (events,
+    images or documents). ``schema_from``: a static parquet path used
+    only to fix the schema (streaming sources require one up front)."""
     schema = spark.read.parquet(schema_from).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
@@ -295,55 +299,6 @@ def streaming_cluster_counts(
             "n",
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# Streaming image ingest: the flagship pipeline as a live query
-
-
-def read_images_stream(
-    spark: SparkSession,
-    input_dir: str,
-    schema_from: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """File-source stream over a directory of image parquet files
-    (the input_hint table shape: image_id, bytes, w, h, fmt, caption,
-    phash). ``schema_from`` fixes the schema up front, as streaming
-    sources require."""
-    schema = spark.read.parquet(schema_from).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(input_dir)
-
-
-def streaming_image_zone_tile_counts(
-    spark: SparkSession,
-    images: DataFrame,
-    base_zoom: int = 14,
-    pip_res: int = 8,
-) -> DataFrame:
-    """The flagship image pipeline (pipeline.run_pipeline) running as
-    a Structured Streaming query over an image file stream — newly
-    landed crawl shards are decoded, PSNR-gated, geotagged, PIP
-    zone-assigned and tile-assigned as they arrive, maintaining the
-    live (zone, tile) rollup.
-
-    This is deliberately the SAME code path as the batch flagship:
-    its plan is streaming-legal by construction — one stateless fused
-    mapInArrow (decode + anchor + cell + PIP + tile; the polygon index
-    rides in the kernel closure, so every micro-batch's tasks carry
-    it), then a single aggregation whose key space
-    (|zones| x |tiles in the fixture extent|) is bounded, so complete
-    -mode state stays a few thousand rows no matter how many shards
-    stream in. No code fork between batch and streaming is the point:
-    the parity test pins stream output == batch output on identical
-    files, and exactly-once restarts come from the checkpoint dir.
-    """
-    from .. import pipeline
-
-    return pipeline.run_pipeline(spark, images, base_zoom=base_zoom, pip_res=pip_res)
 
 
 def streaming_source_mixture(

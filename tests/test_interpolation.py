@@ -245,3 +245,14 @@ def test_trajectory_simplify_edges(spark):
 
     with _pytest.raises(ValueError):
         interpolation.trajectory_simplify(df, eps_m=-1.0)
+
+
+def test_trajectory_simplify_plans_without_warnings(spark):
+    """Building the plan raises no eval-type inference warning."""
+    import random
+    import warnings
+
+    df = _trace_df(spark, random.Random(3), n_users=2, n_pts=10)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        interpolation.trajectory_simplify(df)

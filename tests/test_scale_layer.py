@@ -370,7 +370,7 @@ def test_stream_zone_counts_match_batch(spark, sf_dir, tmp_path):
         ).alias("lon"),
     )
 
-    stream = zone_stream.read_events_stream(spark, events_path, events_path)
+    stream = zone_stream.read_parquet_stream(spark, events_path, events_path)
     result = zone_stream.zone_window_counts(
         cdr_like(stream), towers, ts_col="ts", window="1 day"
     )
@@ -449,8 +449,8 @@ def test_streaming_image_pipeline_matches_batch_and_resumes(spark, tmp_path):
     synthetic.images_df(spark, 200, partitions=4).write.parquet(str(d))
     ckpt = str(tmp_path / "ckpt")
 
-    stream = zone_stream.read_images_stream(spark, str(d), str(d))
-    res = zone_stream.streaming_image_zone_tile_counts(spark, stream)
+    stream = zone_stream.read_parquet_stream(spark, str(d), str(d))
+    res = pipeline.run_pipeline(spark, stream)
     zone_stream.run_available_now(res, "img_zt", ckpt)
     key = lambda r: (r.zone_id, r.x, r.y)
     val = lambda r: (r.n_images, r.n_psnr_ok, r.caption_bytes)
@@ -465,8 +465,8 @@ def test_streaming_image_pipeline_matches_batch_and_resumes(spark, tmp_path):
     synthetic.images_df(spark, 300, partitions=2).filter(
         F.col("image_id") >= "img0000000200"
     ).write.mode("append").parquet(str(d))
-    stream2 = zone_stream.read_images_stream(spark, str(d), str(d))
-    res2 = zone_stream.streaming_image_zone_tile_counts(spark, stream2)
+    stream2 = zone_stream.read_parquet_stream(spark, str(d), str(d))
+    res2 = pipeline.run_pipeline(spark, stream2)
     zone_stream.run_available_now(res2, "img_zt2", ckpt)
     got2 = {
         key(r): val(r) for r in spark.sql("SELECT * FROM img_zt2").collect()
@@ -496,7 +496,7 @@ def test_streaming_source_mixture_matches_batch(spark, sf_dir, tmp_path):
             ),
         )
 
-    stream = zone_stream.read_images_stream(spark, str(d), str(d))
+    stream = zone_stream.read_parquet_stream(spark, str(d), str(d))
     res = zone_stream.streaming_source_mixture(with_ts(stream))
     zone_stream.run_available_now(res, "smix", str(tmp_path / "ck"))
     got = {

@@ -263,6 +263,66 @@ def test_pipeline_end_to_end(spark):
     assert len(zones) > 5  # anchors spread across many Voronoi zones
 
 
+def test_pipeline_matches_bruteforce_rollup(spark):
+    """run_pipeline equals a rollup that uses neither PolygonIndex nor
+    the kernel: zone = brute-force nearest of the 25 towers under the
+    planar metric, anchors and tiles from the shared geo SQL snippets
+    evaluated in DuckDB, every image past the PSNR gate."""
+    import duckdb
+    import pyarrow as pa
+
+    images = synthetic.images_df(spark, 2_000, partitions=4)
+    cols = ["zone_id", "x", "y", "n_images", "n_psnr_ok", "caption_bytes"]
+    got = sorted(
+        (tuple(r) for r in pipeline.run_pipeline(spark, images).select(*cols).collect()),
+        key=repr,
+    )
+
+    src = images.select("phash", "caption").collect()
+    phash = np.array([r["phash"] for r in src], dtype=np.int64)
+    lat, lon = geo.anchor_lat_np(phash), geo.anchor_lon_np(phash)
+    t = synthetic.towers_np(25)
+    d2 = geo.planar_d2_np(lat[:, None], lon[:, None], t[None, :, 1], t[None, :, 2])
+    truth = pa.table(
+        {
+            "phash": pa.array(phash, type=pa.int64()),
+            "caption_len": pa.array([len(r["caption"]) for r in src], type=pa.int64()),
+            "zone": pa.array(t[np.argmin(d2, axis=1), 0].astype(np.int64)),
+        }
+    )
+    con = duckdb.connect()
+    con.register("truth", truth)
+    want = sorted(
+        con.execute(
+            "SELECT CAST(zone AS VARCHAR) AS zone_id, "
+            f"{geo.tile_x_sql('lon', 14)} AS x, {geo.tile_y_sql('lat', 14)} AS y, "
+            "count(*) AS n_images, count(*) AS n_psnr_ok, "
+            "sum(caption_len) AS caption_bytes FROM ("
+            f"SELECT zone, caption_len, {geo.anchor_lat_sql('phash')} AS lat, "
+            f"{geo.anchor_lon_sql('phash')} AS lon FROM truth) GROUP BY 1, 2, 3"
+        ).fetchall(),
+        key=repr,
+    )
+    con.close()
+    assert len(got) > 100
+    assert got == want
+
+
+def test_assign_zone_rejects_large_layers_naming_knn(spark):
+    """Past 2,000 towers assign_zone refuses the inline argmin and
+    names the operator that scales, which must exist."""
+    from cdr_analysis_tools_hadoop_spark.operators import zones
+
+    towers = spark.createDataFrame(
+        [(i, 13.0 + i * 1e-4, 100.0) for i in range(2_001)],
+        "zone_id long, tlat double, tlon double",
+    )
+    pts = spark.createDataFrame([(13.0, 100.0)], "lat double, lon double")
+    with pytest.raises(ValueError, match="nearest_site_within"):
+        zones.assign_zone(pts, towers)
+    assert hasattr(knn, "nearest_site_within")
+
+
 def test_multimodal_resize_box(spark):
     from cdr_analysis_tools_hadoop_spark.operators import multimodal
     from cdr_analysis_tools_hadoop_spark.sources import synthetic
