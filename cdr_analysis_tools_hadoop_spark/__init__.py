@@ -15,3 +15,8 @@ keeps all hot-path compute JVM-side or Arrow-vectorized.
 """
 
 __version__ = "0.1.0"
+
+# every engine kernel imports this package in the Python worker that
+# unpickles it; there this makes later tasks skip re-reading unchanged
+# zip archives (a no-op on the driver and on CPython >= 3.13)
+from . import _worker_zipimport  # noqa: E402,F401

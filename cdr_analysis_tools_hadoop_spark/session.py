@@ -49,11 +49,12 @@ def engine_conf(shuffle_partitions: int) -> dict[str, str]:
         "spark.sql.sources.partitionOverwriteMode": "dynamic",
         "spark.sql.parquet.compression.codec": "zstd",
         # file splits keep Spark's default size, min(128m, max(openCost,
-        # bytes / cores)), which already gives every core a split. A
-        # Python stage pays a fixed CPU cost per task (worker setup
-        # re-reads pyspark.zip's directory), and a split size below the
-        # parquet row group only adds empty tasks: one row group per
-        # file means one non-empty split per file whatever the size.
+        # bytes / cores)), which gives every core a split: that balances
+        # a Python stage, whose tasks cost a reused worker little setup
+        # (_worker_zipimport skips re-reading unchanged zip archives). A
+        # split size below the parquet row group only adds empty tasks:
+        # one row group per file means one non-empty split per file
+        # whatever the size.
         "spark.sql.files.openCostInBytes": "1m",
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         "spark.sql.session.timeZone": "UTC",

@@ -308,6 +308,50 @@ def test_pipeline_matches_bruteforce_rollup(spark):
     assert got == want
 
 
+def test_python_workers_skip_rereading_unchanged_zip_archives(spark):
+    """Once a Python worker has imported the engine, the stdlib's
+    per-task ``importlib.invalidate_caches()`` re-reads no unchanged zip
+    archive (pyspark.zip, py4j, jars) there. The probe reaches the
+    engine the way every kernel does, through an engine module its
+    closure unpickles. Only the second probe pass is checked: the first
+    makes every pooled worker (the pool is FIFO, at most a few per core)
+    import the engine and take its one stamping read."""
+    import pyarrow as pa
+
+    from cdr_analysis_tools_hadoop_spark import _worker_zipimport
+
+    pipeline.run_pipeline(spark, synthetic.images_df(spark, 20, partitions=2)).collect()
+
+    def probe(batches):
+        import importlib
+        import zipimport
+
+        hooked = zipimport.zipimporter.invalidate_caches is _worker_zipimport._invalidate_caches
+        reads = []
+        read_directory = zipimport._read_directory
+
+        def counting_read(path):
+            reads.append(path)
+            return read_directory(path)
+
+        zipimport._read_directory = counting_read
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read_directory
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({"hooked": [hooked], "reads": [len(reads)]})
+
+    n = 4 * spark.sparkContext.defaultParallelism
+    probes = spark.range(n, numPartitions=n).mapInArrow(probe, "hooked boolean, reads long")
+    probes.collect()
+    rows = probes.collect()
+    assert len(rows) == n
+    assert all(r["hooked"] for r in rows)
+    assert all(r["reads"] == 0 for r in rows)
+
+
 def test_assign_zone_rejects_large_layers_naming_knn(spark):
     """Past 2,000 towers assign_zone refuses the inline argmin and
     names the operator that scales, which must exist."""
