@@ -28,6 +28,7 @@ import zlib
 import numpy as np
 
 _HDR = struct.Struct("<4sHHB")
+_MAGICS = (b"RAWZ", b"PNGL", b"QNT4", b"QZ2_")
 
 
 def encode_rawz(pixels: np.ndarray) -> bytes:
@@ -74,7 +75,7 @@ def decode(blob: bytes) -> np.ndarray:
             "environment; Spark plumbing is format-agnostic (binary in, "
             "ndarray out)"
         )
-    if magic not in (b"RAWZ", b"PNGL", b"QNT4", b"QZ2_"):
+    if magic not in _MAGICS:
         raise ValueError(f"unknown codec magic {magic!r}")
     payload = zlib.decompress(blob[_HDR.size:])
     if magic == b"RAWZ":
@@ -174,8 +175,8 @@ def decode_video(blob: bytes) -> tuple[np.ndarray, int]:
 
 # --- shared kernel helpers ---------------------------------------------------
 # The Arrow kernels (pipeline, operators/multimodal) all read a binary
-# column, group decoded images by shape and reduce each group as one
-# stacked numpy op; these are the one copy of those steps.
+# column, decode it as one stack per image shape and reduce each stack
+# as one numpy op; these are the one copy of those steps.
 
 _LUMA_W = np.array([0.299, 0.587, 0.114])
 
@@ -202,19 +203,79 @@ def blob_views(rb, name: str = "bytes") -> list[memoryview]:
     return [data[offs[i] : offs[i + 1]] for i in range(len(barr))]
 
 
-def shape_groups(pix_list):
-    """Yield (indices, stack) per distinct image shape: one stacked
-    numpy op per (h, w, channels) instead of one per image. The
-    channel count is part of the key — same-sized gray and RGB images
-    must not land in one np.stack."""
-    groups: dict[tuple, list[int]] = {}
-    for i, p in enumerate(pix_list):
-        groups.setdefault(p.shape, []).append(i)
-    for idxs in groups.values():
-        yield np.asarray(idxs), np.stack([pix_list[i] for i in idxs])
+_MAGIC_U32 = np.frombuffer(b"".join(_MAGICS), dtype="<u4")
+
+
+def decode_stacks(rb, name: str = "bytes") -> list[tuple[np.ndarray, np.ndarray]]:
+    """Decode every blob of a RecordBatch binary column as one uint8
+    (k, h, w, c) stack per distinct header (codec, h, w, c); returns
+    ``[(row indices, stack)]`` with each row in exactly one group.
+
+    All headers are read at once through the offsets buffer (the slice
+    offset honoured). A RAWZ group is decompressed straight into its
+    preallocated contiguous stack; the other codecs go through
+    :func:`decode` per image and are stacked. The channel count is part
+    of the key, so same-sized gray and RGB images never share a stack.
+    A blob :func:`decode` would reject raises what :func:`decode`
+    raises for it."""
+    barr = rb.column(rb.schema.get_field_index(name))
+    n = len(barr)
+    if n == 0:
+        return []
+    _, offbuf, databuf = barr.buffers()
+    # binary arrays carry int32 offsets; honor the slice offset
+    offs = np.frombuffer(offbuf, dtype=np.int32)[barr.offset : barr.offset + n + 1]
+    view = memoryview(databuf if databuf is not None else b"")
+    lo = offs[:-1]
+    short = np.diff(offs) < _HDR.size
+    if short.any():
+        i = int(np.flatnonzero(short)[0])
+        decode(view[offs[i] : offs[i + 1]])  # raises struct.error
+    hdr = np.frombuffer(view, dtype=np.uint8)[lo[:, None] + np.arange(_HDR.size)]
+    hit = hdr[:, :4].copy().view("<u4") == _MAGIC_U32  # (n, 4): row i is codec j
+    code = hit.argmax(axis=1)
+    known = hit.any(axis=1)
+    if not known.all():
+        i = int(np.flatnonzero(~known)[0])
+        decode(view[offs[i] : offs[i + 1]])  # raises ValueError / NotImplementedError
+    h = hdr[:, 6].astype(np.int64) | hdr[:, 7].astype(np.int64) << 8
+    w = hdr[:, 4].astype(np.int64) | hdr[:, 5].astype(np.int64) << 8
+    key = code << 40 | h << 24 | w << 8 | hdr[:, 8]
+    if (key == key[0]).all():
+        groups = [np.arange(n)]
+    else:
+        _, inv = np.unique(key, return_inverse=True)
+        order = np.argsort(inv, kind="stable")
+        groups = np.split(order, np.cumsum(np.bincount(inv))[:-1])
+
+    out = []
+    for idxs in groups:
+        i0 = idxs[0]
+        starts = (offs[idxs] + _HDR.size).tolist()
+        ends = offs[idxs + 1].tolist()
+        if code[i0] != 0:  # not RAWZ
+            stack = np.stack([decode(view[s - _HDR.size : e]) for s, e in zip(starts, ends)])
+        else:
+            shape = (int(h[i0]), int(w[i0]), int(hdr[i0, 8]))
+            size = shape[0] * shape[1] * shape[2]
+            stack = np.empty((len(idxs), *shape), dtype=np.uint8)
+            dst = memoryview(stack.reshape(-1))
+            at = 0
+            for s, e in zip(starts, ends):
+                payload = zlib.decompress(view[s:e])
+                if len(payload) != size:
+                    raise ValueError(
+                        f"RAWZ payload of {len(payload)} bytes does not fill "
+                        f"a {shape} image"
+                    )
+                dst[at : at + size] = payload
+                at += size
+        out.append((idxs, stack))
+    return out
 
 
 _ONES = np.uint64(0x0101010101010101)  # bit 0 of every byte
+_SSE_BLOCK_BYTES = 1 << 18  # rows per step of qnt4_sse: its scratch stays in L2
 
 
 def qnt4_sse(stack: np.ndarray) -> np.ndarray:
@@ -225,26 +286,44 @@ def qnt4_sse(stack: np.ndarray) -> np.ndarray:
     sample v has residual (v & 3) - 2 and squared error 4, 1, 0, 1 for
     v & 3 = 0, 1, 2, 3: SSE = 4·#(v & 3 == 0) + #(v odd). Both counts
     are taken bit-parallel (SWAR) over uint64 views, one indicator bit
-    per byte lane, so no per-sample temporary wider than the input is
-    made. Images whose byte count is not a multiple of 8 are padded
-    with 2, whose residual is 0."""
+    per byte lane. The stack is walked in blocks of rows through two
+    reused scratch buffers of about ``_SSE_BLOCK_BYTES`` each, so no
+    temporary as large as the stack is made. Images whose byte count
+    is not a multiple of 8 (or a non-contiguous stack) are copied block
+    by block into a buffer padded with 2, whose residual is 0."""
     k = stack.shape[0]
     n = int(np.prod(stack.shape[1:], dtype=np.int64))
-    flat = stack.reshape(k, n)
-    if n % 8 or not flat.flags.c_contiguous:
-        padded = np.full((k, -(-n // 8) * 8), 2, dtype=np.uint8)
-        padded[:, :n] = flat
-        flat = padded
-    x = flat.view(np.uint64)
-    z = x >> np.uint64(1)
-    z |= x
-    np.invert(z, out=z)
-    z &= _ONES  # lane bit set <=> v & 3 == 0
-    z <<= np.uint64(2)
-    z += x & _ONES  # lane = 4·[v & 3 == 0] + [v odd], at most 4
-    z *= _ONES  # top byte = sum of the 8 lanes, at most 32
-    z >>= np.uint64(56)
-    return z.sum(axis=1, dtype=np.int64)
+    sse = np.zeros(k, dtype=np.int64)
+    if k == 0 or n == 0:
+        return sse
+    words = -(-n // 8)
+    rows = max(1, _SSE_BLOCK_BYTES // (words * 8))
+    direct = n % 8 == 0 and stack.flags.c_contiguous
+    flat = stack.reshape(k, n) if direct else None
+    if not direct:
+        padded = np.full((min(rows, k), words * 8), 2, dtype=np.uint8)
+    z = np.empty((min(rows, k), words), dtype=np.uint64)
+    t = np.empty_like(z)
+    for r0 in range(0, k, rows):
+        r1 = min(r0 + rows, k)
+        m = r1 - r0
+        if direct:
+            x = flat[r0:r1].view(np.uint64)
+        else:
+            padded[:m, :n] = stack[r0:r1].reshape(m, n)
+            x = padded[:m].view(np.uint64)
+        zb, tb = z[:m], t[:m]
+        np.right_shift(x, np.uint64(1), out=zb)
+        zb |= x
+        np.invert(zb, out=zb)
+        zb &= _ONES  # lane bit set <=> v & 3 == 0
+        zb <<= np.uint64(2)
+        np.bitwise_and(x, _ONES, out=tb)
+        zb += tb  # lane = 4·[v & 3 == 0] + [v odd], at most 4
+        zb *= _ONES  # top byte = sum of the 8 lanes, at most 32
+        zb >>= np.uint64(56)
+        zb.sum(axis=1, dtype=np.int64, out=sse[r0:r1])
+    return sse
 
 
 def psnr(a: np.ndarray, b: np.ndarray) -> float:

@@ -62,12 +62,12 @@ def decode_features(images: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
         import pyarrow as pa
 
         for rb in batches:
-            pix_list = [codec.decode(v) for v in codec.blob_views(rb)]
-            n = len(pix_list)
+            n = rb.num_rows
             ml = np.empty(n)
             ps = np.empty(n)
             pph = np.empty(n, dtype=np.int64)
-            for idxs, stack in codec.shape_groups(pix_list):
+            pdh = np.empty(n, dtype=np.int64)
+            for idxs, stack in codec.decode_stacks(rb):
                 k, h, w, c = stack.shape
                 csum = stack.sum(axis=(1, 2), dtype=np.int64)
                 ml[idxs] = (csum @ codec.luma_weights(c)) / (h * w)
@@ -77,10 +77,9 @@ def decode_features(images: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
                     ps[idxs] = np.minimum(
                         10.0 * np.log10(255.0**2 * npix / sse), 1e9
                     )
-            pdh = np.empty(n, dtype=np.int64)
-            for i, pix in enumerate(pix_list):
-                pph[i] = codec.phash_ahash(pix)
-                pdh[i] = codec.dhash(pix)
+                for i, pix in zip(idxs, stack):
+                    pph[i] = codec.phash_ahash(pix)
+                    pdh[i] = codec.dhash(pix)
             yield pa.RecordBatch.from_arrays(
                 [
                     rb.column(0),  # image_id: same Arrow buffer, zero copy
@@ -426,12 +425,11 @@ def resize_box(images: DataFrame, factor: int = 2) -> DataFrame:
         import pyarrow as pa
 
         for rb in batches:
-            pix_list = [codec.decode(v) for v in codec.blob_views(rb)]
-            n = len(pix_list)
+            n = rb.num_rows
             ws = np.empty(n, dtype=np.int32)
             hs = np.empty(n, dtype=np.int32)
             blobs: list = [None] * n
-            for idxs, stack in codec.shape_groups(pix_list):
+            for idxs, stack in codec.decode_stacks(rb):
                 k, h, w, c = stack.shape
                 h2, w2 = (h // factor) * factor, (w // factor) * factor
                 small = (

@@ -25,12 +25,13 @@ N vs 4N efficiency criterion checks.
 
 from __future__ import annotations
 
+import functools
 import os
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from .functions import codec, geo
 from .operators import spatial_join
@@ -42,14 +43,12 @@ _MSE_GATE = 255.0**2 * 1e-4
 
 
 def _decode_and_gate(rb):
-    """Decode every blob of the batch's ``bytes`` column (zero-copy
-    slicing of the Arrow buffer) and apply the qnt4 PSNR gate per shape
-    stack; returns the bool ``ok`` array."""
-    pix_list = [codec.decode(v) for v in codec.blob_views(rb)]
-    ok = np.empty(len(pix_list), dtype=bool)
-    for idxs, stack in codec.shape_groups(pix_list):
-        _, h, w, c = stack.shape
-        ok[idxs] = codec.qnt4_sse(stack) <= _MSE_GATE * (h * w * c)
+    """Decode the batch's ``bytes`` column as one stack per image shape
+    (codec.decode_stacks) and apply the qnt4 PSNR gate to each stack;
+    returns the bool ``ok`` array."""
+    ok = np.empty(rb.num_rows, dtype=bool)
+    for idxs, stack in codec.decode_stacks(rb):
+        ok[idxs] = codec.qnt4_sse(stack) <= _MSE_GATE * stack[0].size
     return ok
 
 
@@ -63,6 +62,14 @@ def tower_polygons() -> list[tuple[int, np.ndarray]]:
     return list(
         zip(towers[:, 0].astype(np.int64), synthetic.voronoi_polygons(towers))
     )
+
+
+@functools.lru_cache(maxsize=4)
+def _tower_index(pip_res: int) -> spatial_join.PolygonIndex:
+    """The tower layer's PolygonIndex at ``pip_res``, built once per
+    process and resolution: the layer is an engine constant, and the
+    cache keeps the four most recently used resolutions."""
+    return spatial_join.PolygonIndex(tower_polygons(), pip_res)
 
 
 def broadcast_polygon_index(spark: SparkSession, pip_res: int = 8):
@@ -84,9 +91,11 @@ def run_pipeline(
 
     FUSED hot path: decode, PSNR gate, phash->anchor, cell encode,
     PIP zone assignment and tile assignment all run inside ONE
-    mapInArrow kernel, emitting only 5 small int columns per row; Spark
-    finishes with a codegen'd two-phase hash aggregate (map-side
-    partial + one tiny shuffle). Why fused, measured at 480k images
+    mapInArrow kernel, emitting per row a zone-id string (null when no
+    polygon holds the point) plus four ints (tile x, y, gate flag and
+    caption length in characters, both computed in the kernel); the
+    plan is select -> mapInArrow -> one codegen'd two-phase hash
+    aggregate (map-side partial + one tiny shuffle). Why fused, measured at 480k images
     when PIP still ran in a second Python stage (mapInArrow decode ->
     JVM anchor -> ArrowEvalPython PIP): TWO python worker pools and
     two Arrow round trips, whose framework cost was ~2x the actual
@@ -103,33 +112,33 @@ def run_pipeline(
     equals ``n_images`` unless the gate code itself is wrong.
 
     The kernel shares its math with the ad-hoc operators
-    (codec.decode, PolygonIndex/assign_zone_np, the *_np geo
+    (codec.decode_stacks, PolygonIndex/assign_zone_np, the *_np geo
     functions); tests check the rollup against a brute-force
     reference (nearest tower, DuckDB anchors and tiles) that uses
-    neither PolygonIndex nor this kernel. The PolygonIndex
+    neither PolygonIndex nor this kernel. The tower PolygonIndex is
+    built once per process and ``pip_res`` (``_tower_index``) and
     rides in the kernel closure, so Spark ships it in the task binary
     and frees it with the job. ``images`` may be a stream: the plan is
     streaming-legal (a stateless kernel plus one aggregate whose key
     space is bounded by zones x tiles).
     """
-    index = spatial_join.PolygonIndex(tower_polygons(), pip_res)
+    index = _tower_index(pip_res)
 
     out_schema = StructType(
         [
-            StructField("pidx", LongType()),
+            StructField("zone_id", StringType()),
             StructField("x", LongType()),
             StructField("y", LongType()),
             StructField("psnr_ok", LongType()),
             StructField("caption_len", LongType()),
         ]
     )
-    narrow = images.select(
-        "phash", F.length("caption").cast("long").alias("caption_len"), "bytes"
-    )
 
     def kernel(batches):
         import pyarrow as pa
+        import pyarrow.compute as pc
 
+        zone_ids = pa.array([str(p) for p in index.ids], type=pa.string())
         for rb in batches:
             ok = _decode_and_gate(rb).astype(np.int64)
             phash = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
@@ -140,25 +149,20 @@ def run_pipeline(
             x, y = geo.tile_xyz_np(lat, lon, base_zoom)
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(pidx, type=pa.int64()),
+                    # null where no polygon holds the point
+                    zone_ids.take(pa.array(pidx, mask=pidx < 0)),
                     pa.array(x, type=pa.int64()),
                     pa.array(y, type=pa.int64()),
                     pa.array(ok, type=pa.int64()),
-                    rb.column(1),  # caption_len passthrough (zero copy)
+                    # characters, as Spark's length() counts them
+                    pc.utf8_length(rb.column(1)).cast(pa.int64()),
                 ],
-                names=["pidx", "x", "y", "psnr_ok", "caption_len"],
+                names=["zone_id", "x", "y", "psnr_ok", "caption_len"],
             )
 
-    ids_arr = F.array(*[F.lit(str(p)) for p in index.ids])
-    compact = narrow.mapInArrow(kernel, schema=out_schema)
     return (
-        compact.withColumn(
-            "zone_id",
-            F.when(
-                F.col("pidx") >= 0,
-                F.element_at(ids_arr, (F.col("pidx") + F.lit(1)).cast("int")),
-            ),
-        )
+        images.select("phash", "caption", "bytes")
+        .mapInArrow(kernel, schema=out_schema)
         .groupBy("zone_id", "x", "y")
         .agg(
             F.count(F.lit(1)).alias("n_images"),

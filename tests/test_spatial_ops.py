@@ -308,6 +308,56 @@ def test_pipeline_matches_bruteforce_rollup(spark):
     assert got == want
 
 
+def test_pipeline_builds_tower_index_once_per_res(spark, monkeypatch):
+    """run_pipeline builds the tower layer's PolygonIndex once per
+    pip_res per process, from a bounded cache; a cached index gives the
+    same rollup, and so does another resolution."""
+    built = []
+    real = spatial_join.PolygonIndex
+
+    def counting(polys, res):
+        built.append(res)
+        return real(polys, res)
+
+    monkeypatch.setattr(spatial_join, "PolygonIndex", counting)
+    pipeline._tower_index.cache_clear()
+    try:
+        images = synthetic.images_df(spark, 300, partitions=2)
+        first = pipeline.run_pipeline(spark, images, pip_res=8).collect()
+        again = pipeline.run_pipeline(spark, images, pip_res=8).collect()
+        assert built == [8]
+        assert sorted(again, key=repr) == sorted(first, key=repr)
+        other = pipeline.run_pipeline(spark, images, pip_res=7).collect()
+        assert built == [8, 7]
+        assert sorted(other, key=repr) == sorted(first, key=repr)
+        limit = pipeline._tower_index.cache_info().maxsize
+        assert limit is not None
+        for res in range(2, 3 + limit):
+            pipeline._tower_index(res)
+        assert pipeline._tower_index.cache_info().currsize == limit
+    finally:
+        pipeline._tower_index.cache_clear()
+
+
+def test_pipeline_caption_bytes_count_characters(spark):
+    """caption_bytes sums characters, not UTF-8 bytes: non-ASCII
+    captions (accents, CJK, emoji outside the BMP) give the sum of
+    Python's len per caption; a null caption adds nothing."""
+    caps = ["é", "東京", "🙂", "naïve café 東京 🙂🚀", "plain", None]
+    pick = F.array(*[F.lit(c).cast("string") for c in caps])
+    images = synthetic.images_df(spark, 300, partitions=3).withColumn(
+        "caption",
+        F.element_at(pick, (F.pmod("phash", F.lit(len(caps))) + 1).cast("int")),
+    )
+    src = [r["caption"] for r in images.select("caption").collect()]
+    assert {c for c in src} == set(caps)
+    agg = pipeline.run_pipeline(spark, images).collect()
+    assert sum(r["n_images"] for r in agg) == 300
+    assert sum(r["caption_bytes"] or 0 for r in agg) == sum(
+        len(c) for c in src if c is not None
+    )
+
+
 def test_python_workers_skip_rereading_unchanged_zip_archives(spark):
     """Once a Python worker has imported the engine, the stdlib's
     per-task ``importlib.invalidate_caches()`` re-reads no unchanged zip

@@ -64,3 +64,31 @@ def test_queries_oracle_keys_align():
     o = e.oracle_sql()
     missing = set(o) - set(q)
     assert not missing, f"oracle without query: {missing}"
+
+
+def test_every_oracle_emits_no_hugeint_or_decimal(sf_dir):
+    """DuckDB widens sum()/count() arithmetic to HUGEINT and decimal
+    literals to DECIMAL where Spark emits BIGINT/DOUBLE, and the oracle
+    gate's value hash then compares `5` with `5.0`. DESCRIBE every
+    oracle_sql() text over the sf tables: no column may be either."""
+    import glob
+    import os
+
+    import duckdb
+
+    import __spark_entry__ as e
+
+    con = duckdb.connect()
+    for path in sorted(glob.glob(f"{sf_dir}/*.parquet")):
+        table = os.path.basename(path)[: -len(".parquet")]
+        con.execute(f"CREATE VIEW {table} AS SELECT * FROM read_parquet('{path}')")
+    oracles = e.oracle_sql()
+    assert len(oracles) >= 100
+    wide = {}
+    for name, sql in oracles.items():
+        types = con.execute(f"DESCRIBE {sql}").fetchall()
+        bad = [(r[0], r[1]) for r in types if r[1] == "HUGEINT" or r[1].startswith("DECIMAL")]
+        if bad:
+            wide[name] = bad
+    con.close()
+    assert not wide, wide
